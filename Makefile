@@ -1,10 +1,17 @@
-.PHONY: test bench package plans demo clean
+.PHONY: test bench perfbench package plans demo clean
 
 test:
 	python -m pytest tests/ -x -q
 
 bench:
 	python bench.py
+
+# the registered benchmark workloads (BENCHMARK.json) at seed 1, then the
+# benchmark's own smoke test
+perfbench:
+	python3 perfbench/run.py --workload crawl_wide --seed 1 --seconds 1 --trace 0
+	python3 perfbench/run.py --workload curation_suite --seed 1 --seconds 1 --trace 0
+	python -m pytest perfbench -q
 
 plans:
 	python tests/explain_plans.py

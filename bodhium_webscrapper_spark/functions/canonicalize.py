@@ -122,6 +122,13 @@ def canonicalize_udf(urls: pd.Series) -> pd.Series:
     return urls.map(lambda u: canonicalize_one(u))
 
 
+# The same canonicalizer, marked nondeterministic so the optimizer cannot
+# copy the call into a filter it pushes below the projection (a deterministic
+# UDF is inlined into with_canonical_url's isNotNull filter, and the plan then
+# runs two Python passes over the same URLs). The output is unchanged.
+_canonicalize_once = pandas_udf(canonicalize_udf.func, StringType()).asNondeterministic()
+
+
 # dot-free so no dot-segment handling can ever apply on the fast path
 _SIMPLE_PATH_RE = re.compile(r"^/[A-Za-z0-9_\-/]*$")
 _ORIGIN_RE = re.compile(r"^(https?://[^/]+)")
@@ -515,12 +522,13 @@ def with_canonical_url(
 ) -> DataFrame:
     """Add ``canonical_url``, ``host``, ``url_hash`` columns.
 
-    Only the RFC 3986 string rewrite runs in Python (Arrow-batched); host
-    extraction and hashing stay JVM-side for whole-stage codegen.
+    Only the RFC 3986 string rewrite runs in Python (Arrow-batched), once
+    per row; host extraction and hashing stay JVM-side for whole-stage
+    codegen.
     """
     c = out_prefix + "canonical_url"
     return (
-        df.withColumn(c, canonicalize_udf(F.col(url_col)))
+        df.withColumn(c, _canonicalize_once(F.col(url_col)))
         .filter(F.col(c).isNotNull())
         .withColumn(out_prefix + "host", host_of(F.col(c)))
         .withColumn(out_prefix + "url_hash", url_key(F.col(c)))

@@ -262,14 +262,14 @@ def compaction_plan(
     Returns ``(id_col, bytes_col, grp)``; the caller's rewrite job groups
     by ``grp`` and coalesces each group into one output file.
     """
+    if target_bytes <= 0:  # before doc_token_offsets runs its jobs
+        raise ValueError("target_bytes must be positive")
     offs = doc_token_offsets(
         files.select(id_col, bytes_col),
         id_col=id_col,
         ntok_col=bytes_col,
         num_partitions=num_partitions,
     )
-    if target_bytes <= 0:
-        raise ValueError("target_bytes must be positive")
     return offs.select(
         id_col,
         bytes_col,

@@ -224,7 +224,8 @@ def host_budget_map(
     """(host, _host_budget) for hosts declaring a positive crawl delay.
 
     Wave-invariant (a pure function of the rules table): loop callers
-    compute it once and persist (CrawlJob does)."""
+    compute it once (CrawlJob folds it into its persisted per-host policy
+    table)."""
     delays = (
         robots.groupBy("host")
         .agg(F.max("crawl_delay_ms").alias("_delay_ms"))

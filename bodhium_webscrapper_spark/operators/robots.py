@@ -11,7 +11,7 @@ no Python in the path.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
@@ -89,6 +89,47 @@ def _rules_array(dis_col: str, alw_col: str):
     )
 
 
+def rules_table(flattened: DataFrame) -> DataFrame:
+    """``(_r_host, _r_rules)`` from a one-row-per-host rules table
+    (:func:`flatten_rules` output): the join side of the robots gate, its
+    per-rule regexes already compiled to strings."""
+    if "allow_prefixes" not in flattened.columns:
+        flattened = flattened.withColumn(
+            "allow_prefixes", F.array().cast("array<string>")
+        )
+    return flattened.select(
+        F.col("host").alias("_r_host"),
+        _rules_array("disallow_prefixes", "allow_prefixes").alias("_r_rules"),
+    )
+
+
+def robots_allowed(rules: Column, url: Column) -> Column:
+    """RFC 9309 verdict of ``url``'s path under ``rules`` (a
+    :func:`rules_table` ``_r_rules`` array): True unless the longest
+    matching rule is a Disallow.
+
+    §2.2.2 precedence: among the rules whose pattern matches the path, the
+    one with the MOST OCTETS (longest rule string) wins; an Allow and a
+    Disallow of equal length resolve to Allow. Rules with a regex (``*`` /
+    trailing ``$``, §2.2.3) match by ``regexp_like``, plain prefixes by
+    ``startswith``. A null ``rules`` (host without rules) is allowed."""
+    path = F.coalesce(F.parse_url(url, F.lit("PATH")), F.lit("/"))
+
+    def matches(r):
+        return F.when(r["rx"].isNull(), F.startswith(path, r["pat"])).otherwise(
+            F.regexp_like(path, r["rx"])
+        )
+
+    def best(is_allow):
+        return F.aggregate(
+            F.filter(rules, lambda r: (r["allow"] == F.lit(is_allow)) & matches(r)),
+            F.lit(0),
+            lambda acc, r: F.greatest(acc, F.length(r["pat"])),
+        )
+
+    return ~F.coalesce(best(False) > best(True), F.lit(False))
+
+
 def robots_gate(
     df: DataFrame,
     robots: DataFrame,
@@ -99,16 +140,12 @@ def robots_gate(
 ) -> DataFrame:
     """Drop rows whose URL path is blocked by its host's robots rules.
 
-    Full RFC 9309 §2.2.2 rule precedence: among the rules whose pattern
-    matches the path, the one with the MOST OCTETS (longest rule string)
-    wins; an Allow and Disallow of equal length resolve to Allow. Patterns
-    support the §2.2.3 special characters — ``*`` (any sequence) and a
-    trailing ``$`` (end anchor) — via per-rule regexes built once at
-    rules-prep time; plain prefixes take a ``startswith`` fast path (the
-    overwhelmingly common case, and exactly the legacy behavior: with no
-    allow rules and no wildcards, longest-match-blocked ⇔ any-match-blocked,
-    so fixture rules tables without an ``allow_prefixes`` column are
-    unaffected).
+    Full RFC 9309 rule precedence and special characters
+    (:func:`robots_allowed`). Plain prefixes take a ``startswith`` fast
+    path (the overwhelmingly common case, and exactly the legacy behavior:
+    with no allow rules and no wildcards, longest-match-blocked ⇔
+    any-match-blocked, so fixture rules tables without an
+    ``allow_prefixes`` column are unaffected).
 
     Hosts absent from the rules table are allowed (standard robots default).
     ``flat=True`` promises ``robots`` is already one-row-per-host (e.g. a
@@ -123,40 +160,15 @@ def robots_gate(
     """
     if strategy not in ("broadcast", "shuffle"):
         raise ValueError(f"strategy must be broadcast|shuffle, got {strategy!r}")
-    path = F.coalesce(F.parse_url(F.col(url_col), F.lit("PATH")), F.lit("/"))
-    flattened = robots if flat else flatten_rules(robots)
-    if "allow_prefixes" not in flattened.columns:
-        flattened = flattened.withColumn(
-            "allow_prefixes", F.array().cast("array<string>")
-        )
-    rules = flattened.select(
-        F.col("host").alias("_r_host"),
-        _rules_array("disallow_prefixes", "allow_prefixes").alias("_r_rules"),
-    )
+    rules = rules_table(robots if flat else flatten_rules(robots))
     if strategy == "broadcast":
         rules = F.broadcast(rules)
     else:
         rules = rules.hint("shuffle_hash")
     joined = df.join(rules, df[host_col] == F.col("_r_host"), "left")
-
-    def matches(r):
-        return F.when(r["rx"].isNull(), F.startswith(path, r["pat"])).otherwise(
-            F.regexp_like(path, r["rx"])
-        )
-
-    def best(is_allow):
-        return F.aggregate(
-            F.filter(
-                "_r_rules", lambda r: (r["allow"] == F.lit(is_allow)) & matches(r)
-            ),
-            F.lit(0),
-            lambda acc, r: F.greatest(acc, F.length(r["pat"])),
-        )
-
-    blocked = best(False) > best(True)
-    return joined.filter(~F.coalesce(blocked, F.lit(False))).drop(
-        "_r_host", "_r_rules"
-    )
+    return joined.filter(
+        robots_allowed(F.col("_r_rules"), F.col(url_col))
+    ).drop("_r_host", "_r_rules")
 
 
 def parse_robots_txt(

@@ -7,17 +7,21 @@ DataFrame plan, the only driver-side control flow is the wave loop and
 empty-checks (mirroring the reference's source-fallback control flow).
 
 Wave t (every stage a DataFrame; schema of frontier rows:
-url_hash, canonical_url, host, depth, priority, retry_count) runs exactly
-TWO Spark jobs — the two artifact writes (the bucketed fetch strategy adds
-a third, narrow one: the numeric-only wave-table write); counts/metrics
+url_hash, canonical_url, host, depth, priority, retry_count) runs two
+actions, the two artifact writes (the bucketed fetch strategy adds a
+third, narrow one: the numeric-only wave-table write); counts/metrics
 come free from parquet footers and the next frontier is DERIVED, not
 materialized:
 
   frontier_t = explode(page_results_{t-1}.outlinks) ∪ pending misses
                (lazy plan over committed artifacts; wave 0: seeds)
   candidates = dedup(frontier_t)   first-wins per url_hash         [A1]
-  new        = candidates ANTI-JOIN seen (bloom pre-pass + exact)  [J2]
-  gated      = robots_gate(new)                                    [U5]
+  new        = candidates ANTI-JOIN seen (bloom pre-pass + exact;
+               wave 0: an empty relation the optimizer folds away) [J2]
+  gated      = new ⋈ policy ON host, filter robots verdict,        [U5/W3]
+               budget = coalesce(crawl-delay budget, default)
+               (policy: the per-host politeness table, built once
+               per run — see CrawlJob._host_policy)
   scheduled  = per-host top-budget window, host-hash salted        [W1/W3]
                → global wave cap, ordered (priority desc, url_hash)[W2]
                → WRITE (job 1)
@@ -31,6 +35,21 @@ materialized:
                → WRITE page_results (job 2)
   commit: manifest (scheduled + page_results ARE the checkpoint;
   frontier_{t+1} and the seen delta are projections of them)
+
+Under AQE every exchange and broadcast of an action is a Spark job of its
+own. ``perfbench/run.py --workload crawl_wide --trace 1`` (robots with
+crawl delays, default config, 3 waves) measured 8 jobs per wave:
+
+  schedule (6)  wave 0:  crawl-delay aggregation and policy-table exchange
+                         (both once per run), dedup exchange, policy-table
+                         broadcast, politeness exchange, scheduled write
+                wave ≥1: pending-retry keys broadcast (the seen set's
+                         exclusion), policy-table broadcast, dedup
+                         exchange, seen broadcast, politeness exchange,
+                         scheduled write
+  fetch (2)     scheduled-wave broadcast, page_results write
+
+before which run() counts the canonicalized seeds (3 jobs, once).
 
 Determinism: scheduling order is a pure function of the data — sort key
 (priority DESC, url_hash ASC); no monotonically_increasing_id, no clocks,
@@ -54,9 +73,10 @@ from __future__ import annotations
 
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -65,12 +85,11 @@ from bodhium_webscrapper_spark.functions.extract import make_extract_page_outlin
 from bodhium_webscrapper_spark.operators.politeness import (
     global_ordered_cap,
     per_host_budget,
-    with_crawl_delay_budget,
 )
-from bodhium_webscrapper_spark.operators.robots import robots_gate
+from bodhium_webscrapper_spark.operators.robots import robots_allowed, rules_table
 from bodhium_webscrapper_spark.operators.seen import seen_anti_join_cached
 from bodhium_webscrapper_spark.plans.checkpoint import CHECKPOINT_FORMAT, SnapshotStore
-from bodhium_webscrapper_spark.plans.metrics import lineage_rows_table
+from bodhium_webscrapper_spark.plans.metrics import lineage_rows_table, observed
 
 FRONTIER_SCHEMA = T.StructType(
     [
@@ -338,12 +357,14 @@ class CrawlJob:
         self._resumed_at = -1  # set by run(resume=True); lineage marker
         self._seeds_wave = -1  # wave whose frontier IS the seed list (run())
         self._rank_edges = None  # live edge cache of the latest rank blend
-        # wave-invariant politeness artifacts, computed once and persisted:
-        # re-aggregating rules/delays from the raw robots table every wave
-        # was a repeated serial broadcast-build cost in the schedule stage
+        # wave-invariant politeness artifacts: the flattened rules (persisted
+        # and counted here) and the crawl-delay budgets (a plan, read once by
+        # the persisted per-host policy table, _host_policy, so caching it
+        # too would only cost a job)
         self._rules = None
         self._budgets = None
         self._robots_strategy = "broadcast"
+        self._policy = None  # (table, allowed, budget): _host_policy()
         if robots is not None:
             from bodhium_webscrapper_spark.operators.politeness import host_budget_map
             from bodhium_webscrapper_spark.operators.robots import flatten_rules
@@ -357,7 +378,7 @@ class CrawlJob:
             if "crawl_delay_ms" in robots.columns:
                 self._budgets = host_budget_map(
                     robots, config.max_urls_per_host_per_wave, config.wave_period_ms
-                ).persist()
+                )
         # UT1/FineWeb-style blocklist (kind in {domain,substring}, pattern):
         # wave-invariant like the robots rules — persist once, count once to
         # pick the domain anti-join strategy (a 10^7-domain list cannot be a
@@ -469,7 +490,62 @@ class CrawlJob:
         )
 
     def _empty(self, schema: T.StructType) -> DataFrame:
-        return self.spark.createDataFrame([], schema)
+        """An empty frame of ``schema`` that lives in the JVM plan alone:
+        ``limit(0)`` folds to an empty LocalRelation, so the optimizer drops
+        a join against it (wave 0's seen anti-join) and no Python worker or
+        Spark job ever runs for it, unlike ``createDataFrame([], schema)``."""
+        return self.spark.range(1).select(
+            *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+        ).limit(0)
+
+    def _host_policy(self) -> tuple:
+        """The per-host politeness table and its two Columns, built inside
+        ``run()`` (``__init__`` stays plan-free: during the seeds count, or
+        on first use when resuming) and kept for the job's life.
+
+        The table has one row per host that has robots rules or a crawl
+        delay: ``_r_host``, ``_r_rules`` (the rules array with its compiled
+        regex column, ``robots.rules_table``) and ``_hb`` (the crawl-delay
+        budget, ``politeness.host_budget_map``): the full outer join of
+        ``_rules`` and ``_budgets`` on host, persisted. A wave then makes
+        ONE join on host against it, broadcast or (above
+        ``robots_broadcast_threshold``) shuffled, instead of rebuilding the
+        rules array and broadcasting two tables every wave.
+
+        Returns ``(table, allowed, budget)``: the hinted table, the RFC 9309
+        verdict Column and the per-host budget Column ``_host_budget`` =
+        ``coalesce(_hb, max_urls_per_host_per_wave)`` (None when the robots
+        table declares no crawl delays)."""
+        if self._policy is None:
+            table = rules_table(self._rules)
+            budget = None
+            if self._budgets is not None:
+                # both sides are one row per host, so the full outer join is
+                # a union + one aggregation: one exchange, where a join
+                # shuffles both sides (a job each under AQE)
+                budgets = self._budgets.select(
+                    F.col("host").alias("_r_host"), F.col("_host_budget").alias("_hb")
+                )
+                table = (
+                    table.unionByName(budgets, allowMissingColumns=True)
+                    .groupBy("_r_host")
+                    .agg(
+                        F.first("_r_rules", ignorenulls=True).alias("_r_rules"),
+                        F.first("_hb", ignorenulls=True).alias("_hb"),
+                    )
+                )
+                budget = F.coalesce(
+                    F.col("_hb"), F.lit(self.config.max_urls_per_host_per_wave)
+                ).alias("_host_budget")
+            table = table.persist()
+            table = (
+                F.broadcast(table)
+                if self._robots_strategy == "broadcast"
+                else table.hint("shuffle_hash")
+            )
+            allowed = robots_allowed(F.col("_r_rules"), F.col("canonical_url"))
+            self._policy = (table, allowed, budget)
+        return self._policy
 
     def _dedup_first_wins(self, frontier: DataFrame) -> DataFrame:
         return dedup_first_wins_frontier(frontier)
@@ -682,11 +758,14 @@ class CrawlJob:
         (``store.row_count`` / ``column_sum`` / ``partition_metrics``). Each
         removed count was a full Spark job of fixed driver latency — the
         dominant per-wave cost at small wave sizes and the reason round-1
-        scaling efficiency collapsed to 0.39. The wave submits exactly TWO
-        Spark jobs — the scheduled write and the page_results write — plus,
-        under the bucketed fetch strategy, one narrow third job: the
-        numeric-only (32 B/row) bucketed wave-table write, read back from
-        the scheduled artifact's footers rather than recomputed.
+        scaling efficiency collapsed to 0.39. The wave runs two actions —
+        the scheduled write and the page_results write — plus, under the
+        bucketed fetch strategy, one narrow third: the numeric-only
+        (32 B/row) bucketed wave-table write, read back from the scheduled
+        artifact's footers rather than recomputed. AQE runs each exchange
+        and broadcast of an action as a job of its own: 6 schedule + 2
+        fetch jobs per wave as measured (the list is in the module
+        docstring).
         """
         cfg = self.config
         t0 = time.time()
@@ -725,18 +804,29 @@ class CrawlJob:
             deduped = frontier
         else:
             deduped = self._dedup_first_wins(frontier)
+        # the real deduplicated count, computed by the scheduled write
+        # itself (no extra job): read after the write below
+        dedup_obs = Observation()
+        counted = deduped.observe(dedup_obs, F.count(F.lit(1)).alias("n"))
         probe_cache = None
         if self._total_seen <= cfg.seen_broadcast_threshold:
-            new = deduped.join(
+            new = counted.join(
                 F.broadcast(seen.select("url_hash")), "url_hash", "left_anti"
             )
         else:
-            new, probe_cache = seen_anti_join_cached(deduped, seen, "url_hash", bloom)
-        gated = (
-            robots_gate(new, self._rules, flat=True, strategy=self._robots_strategy)
-            if self._rules is not None
-            else new
-        )
+            new, probe_cache = seen_anti_join_cached(counted, seen, "url_hash", bloom)
+        # robots verdict + crawl-delay budget: one join on host against the
+        # per-run policy table (see _host_policy)
+        gated, budget_col = new, None
+        if self._rules is not None:
+            table, allowed, budget = self._host_policy()
+            extra = [] if budget is None else [budget]
+            gated = (
+                new.join(table, F.col("host") == F.col("_r_host"), "left")
+                .filter(allowed)
+                .select(*new.columns, *extra)
+            )
+            budget_col = None if budget is None else "_host_budget"
         if self._blocklist is not None:
             from bodhium_webscrapper_spark.operators.blocklist import blocklist_gate
 
@@ -745,16 +835,6 @@ class CrawlJob:
             )
         huge_wave = n_candidates > cfg.salt_activation_threshold
         salt = cfg.salt_buckets if huge_wave else 1
-        budget_col = None
-        if self._budgets is not None:
-            gated = with_crawl_delay_budget(
-                gated,
-                None,
-                cfg.max_urls_per_host_per_wave,
-                cfg.wave_period_ms,
-                budgets=self._budgets,
-            )
-            budget_col = "_host_budget"
         # huge waves: count-split the politeness window (only over-budget
         # hosts — the Zipf head — pay the sort; the tail passes through
         # sort-free). The split consumes the gated frontier three times
@@ -796,6 +876,10 @@ class CrawlJob:
         finally:
             if not cfg.schedule_aqe:
                 self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        dedup_metrics = observed(dedup_obs)
+        # None: the observed stage was dropped (a wave that schedules
+        # nothing), and only such a wave counts its deduped frontier itself
+        n_deduped = dedup_metrics["n"] if dedup_metrics else deduped.count()
         if probe_cache is not None:  # bloom probe cache served its one action
             probe_cache.unpersist()
         if gate_cache is not None:  # count-split cache served the write
@@ -975,8 +1059,6 @@ class CrawlJob:
         # of page_results) and both release the GIL inside pyarrow — run
         # them concurrently so a miss-bearing giant wave pays max(), not
         # sum(), of the two
-        from concurrent.futures import ThreadPoolExecutor
-
         with ThreadPoolExecutor(max_workers=1) as pool:
             sum_f = pool.submit(
                 self.store.column_sum, wave, "page_results", "n_links"
@@ -997,7 +1079,7 @@ class CrawlJob:
         stats = WaveStats(
             wave=wave,
             candidates=n_candidates,
-            deduped=n_candidates,
+            deduped=n_deduped,
             scheduled=n_scheduled,
             fetched=n_fetched,
             misses=n_misses,
@@ -1179,7 +1261,15 @@ class CrawlJob:
                 # CANONICALIZED frontier — with_canonical_url drops
                 # null/hostless/non-http seeds, so a raw seeds.count()
                 # would overstate candidates and mis-trigger salting.
-                n_frontier = frontier.count()
+                # The count's jobs leave the driver idle: plan the per-host
+                # policy table on a second thread meanwhile.
+                with ThreadPoolExecutor(max_workers=1) as pool:
+                    policy = (
+                        pool.submit(self._host_policy) if self._rules is not None else None
+                    )
+                    n_frontier = frontier.count()
+                    if policy is not None:
+                        policy.result()
             if n_frontier == 0:
                 break
             state = None

@@ -13,13 +13,23 @@ order and seen membership are; metrics are advisory).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 LINEAGE_SCHEMA = (
     "job_id string, wave int, event_seq long, event string, "
     "partition_id int, details map<string,string>"
 )
+
+
+def observed(obs: Observation) -> dict | None:
+    """The metrics an Observation recorded during its first action, or None
+    when that action finished without them: AQE drops an executed stage, and
+    the metrics observed in it, when a later stage of the same query comes
+    up empty."""
+    if obs._jo.getRow().schema() is None:  # blocks until the action ended
+        return None
+    return obs.get
 
 
 def partition_metrics(

@@ -1,7 +1,9 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
+from contextlib import contextmanager
 
 import pytest
 
@@ -30,3 +32,27 @@ def crawl_fixture(spark):
     paths = generate_crawl_fixture(out, n_pages=4000, seed=42)
     pages = prepare_pages(spark, paths["pages_raw"], os.path.join(out, "pages"), n_files=8)
     return {**paths, "pages": pages}
+
+
+_job_groups = itertools.count()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` runs the block in a job group of
+    its own; afterwards ``jobs`` lists the ids of the Spark jobs it
+    submitted (from the status tracker)."""
+
+    @contextmanager
+    def count():
+        group = f"spark_jobs_{next(_job_groups)}"
+        jobs: list[int] = []
+        sc = spark.sparkContext
+        sc.setJobGroup(group, "job count")
+        try:
+            yield jobs
+        finally:
+            sc.setJobGroup(None, None)
+            jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

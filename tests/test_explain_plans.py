@@ -146,6 +146,19 @@ def test_canonicalizer_arrow_batched(spark):
     assert "ArrowEvalPython" in p and "BatchEvalPython" not in p
 
 
+def test_seed_canonicalization_single_python_pass(spark):
+    """The seeds wave's canonicalization (the bench:seed_canon plan) runs the
+    Python canonicalizer once: with_canonical_url's isNotNull filter must not
+    carry a second copy of the UDF below the projection."""
+    from bodhium_webscrapper_spark.functions.canonicalize import with_canonical_url
+
+    seeds = spark.createDataFrame(
+        [("https://x.example/a", 1.0), (None, 1.0)], "url string, priority double"
+    )
+    tree = plan_of(with_canonical_url(seeds)).split("\n\n")[0]
+    assert tree.count("ArrowEvalPython") == 1
+
+
 def test_event_time_pruning_reaches_scan(spark, crawl_fixture):
     """Batch event-time handling: the warc_ts range predicate must be
     pushed into the parquet scan (days(warc_ts) partition-pruning analogue

@@ -368,3 +368,160 @@ def test_seen_compaction_preserves_semantics(spark, crawl_fixture, tmp_path):
     resumed = _mk_job(spark, crawl_fixture, tmp_path, "cp", compact_seen_every=2)
     resumed.run(resume=True)
     assert _order_tuples(resumed) == _order_tuples(plain)
+
+
+# ---- per-host policy table (robots verdict + crawl-delay budget)
+
+# allow overrides, `*` wildcards, `$` anchors, an allow/disallow length tie,
+# a host with only a crawl delay and one with both
+_POLICY_ROBOTS = [
+    # /p1* blocked except /p1*7 (longer allow wins) and the /p12 subtree
+    ("megahost.example", ["/p1", "/private"], ["/p1*7$", "/p12"], 0),
+    # every path ending in 5 is blocked; 10_000 // 2500 = 4 URLs per wave
+    ("host00000.example", ["/*5$"], [], 2500),
+    ("host00001.example", ["/private"], ["/private/p1"], 0),
+    # paths with a 0 after /p are blocked, except exactly /p10
+    ("host00002.example", ["/p*0"], ["/p10$"], 0),
+    # only the root page
+    ("host00003.example", ["/"], ["/$"], 0),
+    # equal length: the allow wins, nothing is blocked
+    ("host00004.example", ["/p2"], ["/p2"], 0),
+    ("host00005.example", [], [], 5000),
+]
+
+
+def _robots_verdict(url, disallow, allow):
+    """RFC 9309: the longest matching rule wins, an allow wins a tie."""
+    import re
+    from urllib.parse import urlsplit
+
+    path = urlsplit(url).path or "/"
+
+    def match(p):
+        if "*" not in p and not p.endswith("$"):
+            return path.startswith(p)
+        anchored = p.endswith("$")
+        rx = re.escape(p[:-1] if anchored else p).replace(r"\*", ".*")
+        return re.match(rx + ("$" if anchored else ""), path) is not None
+
+    def best(rules):
+        return max((len(p) for p in rules if match(p)), default=0)
+
+    return best(disallow) <= best(allow)
+
+
+def _checksums(job):
+    import hashlib
+
+    def digest(rows):
+        return hashlib.sha256(repr(sorted(map(tuple, rows))).encode()).hexdigest()
+
+    return {
+        "crawl_order": digest(job.crawl_order().collect()),
+        "seen_set": digest(job.seen_set().collect()),
+        "extracted": digest(job.extracted().collect()),
+    }
+
+
+def test_policy_table_rules_and_delays_both_strategies(spark, crawl_fixture, tmp_path):
+    """One crawl under the robots fixture above, with the policy table
+    broadcast (default) and shuffled (robots_broadcast_threshold=0): the
+    same crawl_order, seen_set and extracted; no scheduled URL is disallowed
+    by an independent RFC 9309 verdict; allow overrides do schedule; crawl
+    delays cap the host's URLs per wave."""
+    robots = spark.createDataFrame(
+        _POLICY_ROBOTS,
+        "host string, disallow_prefixes array<string>, "
+        "allow_prefixes array<string>, crawl_delay_ms long",
+    )
+    cfg = dict(max_urls_per_host_per_wave=40, max_waves=3, global_wave_limit=None)
+    jobs = {}
+    for name, knobs in {"pb": {}, "ps": dict(robots_broadcast_threshold=0)}.items():
+        job = CrawlJob(
+            spark, crawl_fixture["pages"], spark.read.parquet(crawl_fixture["seeds"]),
+            robots, CrawlConfig(**cfg, **knobs), os.path.join(str(tmp_path), name),
+        )
+        assert len(job.run()["waves"]) == 3
+        jobs[name] = job
+    assert jobs["ps"]._robots_strategy == "shuffle"
+    assert _checksums(jobs["pb"]) == _checksums(jobs["ps"])
+
+    rules = {h: (d, a) for h, d, a, _ in _POLICY_ROBOTS}
+    order = jobs["pb"].crawl_order().withColumn(
+        "host", F.parse_url("canonical_url", F.lit("HOST"))
+    )
+    scheduled = [(r.wave, r.host, r.canonical_url) for r in order.collect()]
+    assert all(
+        _robots_verdict(u, *rules[h]) for _, h, u in scheduled if h in rules
+    )
+    overridden = [
+        u for _, h, u in scheduled
+        if h in rules and rules[h][1] and not _robots_verdict(u, rules[h][0], [])
+    ]
+    assert overridden, "no URL scheduled by an allow rule overriding a disallow"
+    per_wave = {}
+    for w, h, _ in scheduled:
+        per_wave[w, h] = per_wave.get((w, h), 0) + 1
+    assert max(n for (_, h), n in per_wave.items() if h == "host00000.example") <= 4
+    assert max(n for (_, h), n in per_wave.items() if h == "host00005.example") <= 2
+    assert max(per_wave.values()) > 4  # undelayed hosts keep the larger budget
+
+
+def test_empty_seen_folds_to_no_join_and_no_job(spark, crawl_fixture, tmp_path, spark_jobs):
+    """Wave 0's seen set is an empty relation the optimizer folds: the seen
+    anti-join against it disappears from the plan and nothing runs a job."""
+    from bodhium_webscrapper_spark.plans.frontier import SEEN_SCHEMA
+
+    job = _mk_job(spark, crawl_fixture, tmp_path, "empty_seen")
+    seen = job._empty(SEEN_SCHEMA)
+    assert seen.schema == SEEN_SCHEMA
+    frontier = spark.sql(
+        "SELECT * FROM VALUES (1L, 'a'), (2L, 'b') AS t(url_hash, canonical_url)"
+    )
+    new = frontier.join(F.broadcast(seen.select("url_hash")), "url_hash", "left_anti")
+    assert "Join" not in new._jdf.queryExecution().optimizedPlan().toString()
+    with spark_jobs() as jobs:
+        rows = new.collect()
+        assert seen.collect() == []
+    assert jobs == []
+    assert sorted(r.url_hash for r in rows) == [1, 2]
+
+
+def test_wave_stats_deduped_observed_without_extra_jobs(
+    spark, crawl_fixture, tmp_path, spark_jobs, monkeypatch
+):
+    """WaveStats.deduped is the first-wins deduplicated count, equal to an
+    independent count, and observing it inside the scheduled write adds no
+    Spark job: the run submits as many jobs as with the observation
+    stubbed out, and counts nothing but the seeds."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+    from bodhium_webscrapper_spark.plans import frontier
+
+    def run(name):
+        spark.catalog.clearCache()  # both runs start from the same cache state
+        job = _mk_job(
+            spark, crawl_fixture, tmp_path, name, max_waves=3, verify_extraction=False
+        )
+        with spark_jobs() as jobs:
+            summary = job.run()
+        return job, summary["waves"], len(jobs)
+
+    counts = []
+    real_count = ClassicDataFrame.count
+    monkeypatch.setattr(
+        ClassicDataFrame, "count", lambda self: counts.append(1) or real_count(self)
+    )
+    job, waves, n_jobs = run("dd_observed")
+    monkeypatch.undo()
+    assert len(counts) == 2  # CrawlJob.__init__'s rules count, the seeds count
+    for s in waves:
+        w = s["wave"]
+        fr = job._seed_frontier() if w == 0 else job._frontier_after(w - 1)
+        assert s["deduped"] == frontier.dedup_first_wins_frontier(fr).count()
+    assert any(s["deduped"] < s["candidates"] for s in waves)
+
+    monkeypatch.setattr(ClassicDataFrame, "observe", lambda self, obs, *exprs: self)
+    monkeypatch.setattr(frontier, "observed", lambda obs: {"n": 0})
+    _, _, n_plain = run("dd_plain")
+    assert n_jobs == n_plain

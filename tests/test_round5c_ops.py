@@ -50,9 +50,12 @@ def test_compaction_plan_groups_bounded_and_partition_invariant(spark):
     assert grps == sorted(grps)
 
 
-def test_compaction_plan_rejects_bad_target(spark):
-    with pytest.raises(ValueError):
-        compaction_plan(_files(spark, [1]), "file_id", "bytes", target_bytes=0)
+def test_compaction_plan_rejects_bad_target(spark, spark_jobs):
+    # raised before the prefix-sum pass shuffles, persists and collects
+    files = _files(spark, [1])
+    with spark_jobs() as jobs, pytest.raises(ValueError):
+        compaction_plan(files, "file_id", "bytes", target_bytes=0)
+    assert jobs == []
 
 
 def test_shard_boundaries_exact_order_statistics(spark):
