@@ -4416,7 +4416,8 @@ _Q_HITS_EDGES_SQL = """
 """
 
 # one HITS half-step: raw sum join, then max-normalize to the 10^6 scale
-# with truncating integer division (mirrors hits_fixed_point exactly;
+# by the ceiling divisor (mx + 999999) // 10^6 with truncating integer
+# division (mirrors hits_fixed_point exactly;
 # all values non-negative so DuckDB floor-div == Spark trunc-div)
 _Q_HITS_SQL = (
     "WITH " + _Q_HITS_EDGES_SQL + """,
@@ -4425,25 +4426,25 @@ _Q_HITS_SQL = (
             FROM edges e JOIN h0 ON e.src = h0.id GROUP BY e.dst),
     a1m AS (SELECT max(auth) AS mx FROM a1r),
     a1 AS (SELECT n.id, CAST(coalesce(a1r.auth, 0)
-             // greatest(a1m.mx // 1000000, 1) AS BIGINT) AS auth
+             // greatest((a1m.mx + 999999) // 1000000, 1) AS BIGINT) AS auth
            FROM nodes n LEFT JOIN a1r USING (id), a1m),
     h1r AS (SELECT e.src AS id, CAST(sum(a1.auth) AS BIGINT) AS hub
             FROM edges e JOIN a1 ON e.dst = a1.id GROUP BY e.src),
     h1m AS (SELECT max(hub) AS mx FROM h1r),
     h1 AS (SELECT n.id, CAST(coalesce(h1r.hub, 0)
-             // greatest(h1m.mx // 1000000, 1) AS BIGINT) AS hub
+             // greatest((h1m.mx + 999999) // 1000000, 1) AS BIGINT) AS hub
            FROM nodes n LEFT JOIN h1r USING (id), h1m),
     a2r AS (SELECT e.dst AS id, CAST(sum(h1.hub) AS BIGINT) AS auth
             FROM edges e JOIN h1 ON e.src = h1.id GROUP BY e.dst),
     a2m AS (SELECT max(auth) AS mx FROM a2r),
     a2 AS (SELECT n.id, CAST(coalesce(a2r.auth, 0)
-             // greatest(a2m.mx // 1000000, 1) AS BIGINT) AS auth
+             // greatest((a2m.mx + 999999) // 1000000, 1) AS BIGINT) AS auth
            FROM nodes n LEFT JOIN a2r USING (id), a2m),
     h2r AS (SELECT e.src AS id, CAST(sum(a2.auth) AS BIGINT) AS hub
             FROM edges e JOIN a2 ON e.dst = a2.id GROUP BY e.src),
     h2m AS (SELECT max(hub) AS mx FROM h2r),
     h2 AS (SELECT n.id, CAST(coalesce(h2r.hub, 0)
-             // greatest(h2m.mx // 1000000, 1) AS BIGINT) AS hub
+             // greatest((h2m.mx + 999999) // 1000000, 1) AS BIGINT) AS hub
            FROM nodes n LEFT JOIN h2r USING (id), h2m)
     SELECT n.id AS doc_id, h2.hub, a2.auth
     FROM nodes n JOIN h2 ON n.id = h2.id JOIN a2 ON n.id = a2.id
@@ -4552,15 +4553,17 @@ _MIME_CASES = [
      '<?xml version="1.0"?><html xmlns="http://www.w3.org/1999/xhtml">'),
     ("video/mp4", "ftyp mp4 data"),
     ("", "random bytes no magic"),
+    ("text/plain", "[DRAFT] notes"),  # weak JSON sniff never overrides
 ]
 
 
 def _mime_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic header/body corpus keyed off documents: the 12
+    """Deterministic header/body corpus keyed off documents: the 13
     _MIME_CASES cover the lying text/html-serving-a-PDF header, a missing
     header filled by markup sniff, case/space/quote variants of the
-    charset parameter, a texty XML sniff under an xhtml declaration, and
-    the no-header-no-magic octet-stream default."""
+    charset parameter, a weak XML sniff under an xhtml declaration, a
+    weak JSON sniff under a text/plain declaration, and the
+    no-header-no-magic octet-stream default."""
     docs = _t(spark, sf_dir, "documents")
     idx = docs.select(
         (F.col("doc_id") % len(_MIME_CASES)).cast("int").alias("i")
@@ -4648,7 +4651,8 @@ _Q_MIME_SQL_TEMPLATE = r"""
       SELECT i, mime, charset, sniffed,
         CASE
           WHEN sniffed IS NOT NULL
-               AND sniffed NOT IN ('text/html', 'text/xml') THEN sniffed
+               AND sniffed NOT IN ('text/html', 'text/xml',
+                                   'application/json') THEN sniffed
           WHEN mime <> '' THEN mime
           WHEN sniffed IS NOT NULL THEN sniffed
           ELSE 'application/octet-stream' END AS effective
@@ -4805,8 +4809,9 @@ _Q_SHARD_SQL = (
 def _reval_corpus(spark: SparkSession, sf_dir: str):
     """Deterministic previous-crawl / refetch header tables for the
     revalidation query: membership, ETag presence/rotation, Last-Modified
-    presence/rotation, and content-hash drift all keyed off doc_id residues
-    so every RFC 9110 branch (strong ETag, weak Last-Modified fallback,
+    presence/rotation, a weak/strong ETag pair that matches under weak
+    comparison, and content-hash drift all keyed off doc_id residues so
+    every RFC 9110 branch (strong ETag, weak Last-Modified fallback,
     hash-only, new, gone) is populated."""
     docs = _t(spark, sf_dir, "documents").select("doc_id")
     d = F.col("doc_id")
@@ -4824,10 +4829,15 @@ def _reval_corpus(spark: SparkSession, sf_dir: str):
         url.alias("url"), etag_p.alias("etag"), lm_p.alias("last_modified"),
         hash_p.alias("content_hash"),
     )
-    etag_c = F.when(
-        (d % 9 == 0) & (d % 4 != 1),
-        F.concat(F.lit('W/"e'), d.cast("string"), F.lit('X"')),
-    ).otherwise(etag_p)
+    etag_c = (
+        F.when(
+            (d % 9 == 0) & (d % 4 != 1),
+            F.concat(F.lit('W/"e'), d.cast("string"), F.lit('X"')),
+        )
+        # same opaque tag without W/: a weak comparison still matches
+        .when((d % 9 == 3) & (d % 4 != 1), F.concat(F.lit('"e'), d.cast("string"), F.lit('"')))
+        .otherwise(etag_p)
+    )
     lm_c = F.when(
         (d % 8 == 0) & (d % 6 != 2),
         F.concat(F.lit("Tue, 0"), ((d % 7) + 1).cast("string"), F.lit(" Feb 2026")),
@@ -4870,6 +4880,7 @@ _Q_REVAL_SQL = r"""
     curr AS (
       SELECT url,
         CASE WHEN d % 9 = 0 AND d % 4 <> 1 THEN 'W/"e' || d || 'X"'
+             WHEN d % 9 = 3 AND d % 4 <> 1 THEN '"e' || d || '"'
              ELSE etag_p END AS etag,
         CASE WHEN d % 8 = 0 AND d % 6 <> 2
              THEN 'Tue, 0' || ((d % 7) + 1) || ' Feb 2026'
@@ -4888,7 +4899,8 @@ _Q_REVAL_SQL = r"""
         WHEN NOT in_p THEN 'new'
         WHEN NOT in_c THEN 'gone'
         WHEN (CASE
-                WHEN pe IS NOT NULL AND ce IS NOT NULL THEN pe = ce
+                WHEN pe IS NOT NULL AND ce IS NOT NULL
+                  THEN regexp_replace(pe, '^W/', '') = regexp_replace(ce, '^W/', '')
                 WHEN pl IS NOT NULL AND cl IS NOT NULL THEN pl = cl
                 ELSE ph IS NOT DISTINCT FROM ch END)
           THEN 'not_modified'

@@ -260,7 +260,7 @@ def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
     n = int(master[len("local[") : -1])
     # diagnostic-only hook: SPARK_GRAFT_EVENTLOG_DIR=<dir> writes the Spark
     # event log so per-job walls / task-time sums / driver gaps can be
-    # decomposed offline (benchmarks/parse_eventlog.py). Off for recorded
+    # decomposed offline (perfbench/eventlog.py). Off for recorded
     # scaling pairs — logging itself adds driver-serial work.
     extra_conf = None
     ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
@@ -284,7 +284,6 @@ def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
         global_wave_limit=None,
         salt_buckets=16,
         seen_broadcast_threshold=0,
-        use_bloom=False,
         # fused-broadcast fetch up to this wave size. The engine default
         # (4M rows ≈ 128 MB) is sized for 4-8 GB cluster executors; this
         # sandbox's single 48 GB JVM comfortably holds a 10^7-row (~320 MB)
@@ -307,11 +306,6 @@ def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
         # against the pre-bucketed pages layout — no driver-serial
         # broadcast build, the giant-wave default (see _giant_fetch)
         fetch_strategy=os.environ.get("SPARK_GRAFT_BENCH_FETCH", "broadcast"),
-        # SPARK_GRAFT_BENCH_SCHED_AQE=0 runs the schedule action under
-        # static planning (CrawlConfig.schedule_aqe) — an experiment knob;
-        # the recorded pairs keep AQE on (the only clean A/B so far read
-        # neutral, and historical records were captured with AQE).
-        schedule_aqe=os.environ.get("SPARK_GRAFT_BENCH_SCHED_AQE", "1") == "1",
         fetch_buckets=FETCH_BUCKETS,
         bucketed_pages_path=os.path.join(
             os.path.dirname(fixture["pages"]), f"pages_bkt{FETCH_BUCKETS}"

@@ -25,9 +25,10 @@ from pyspark.sql import functions as F
 
 # the html-ish family the extractor accepts; anything else is media/drop
 TEXT_MIMES = ("text/html", "application/xhtml+xml", "text/plain", "text/xml")
-# sniffed kinds compatible with a text-family declaration (markup magic
-# does not contradict a text/html header; %PDF does)
-_TEXTY_SNIFFS = ("text/html", "text/xml")
+# weak sniffs: they only fill in a missing header, never override a declared
+# type (markup magic does not contradict a text/html header, and a body that
+# merely starts with "{" or "[" is no proof of JSON; %PDF and GIF8 are)
+_WEAK_SNIFFS = ("text/html", "text/xml", "application/json")
 
 _CHARSET_PARAM_RE = r"""(?i)charset\s*=\s*["']?\s*([A-Za-z0-9_.:\-]+)"""
 
@@ -75,16 +76,17 @@ def sniff_mime(body: Column) -> Column:
 
 
 def effective_mime(header: Column, body: Column) -> Column:
-    """The type the pipeline acts on, WHATWG-precedence: a sniffed
-    NON-texty magic overrides whatever the header claims (the lying
-    ``text/html``-serving-a-PDF case); otherwise the declared type; a
-    texty sniff fills in for a missing header; with neither, the RFC 9110
-    default ``application/octet-stream``."""
+    """The type the pipeline acts on, WHATWG-precedence: a sniffed binary
+    magic (``%PDF``, ``GIF8``) overrides whatever the header claims (the
+    lying ``text/html``-serving-a-PDF case); otherwise the declared type; a
+    weak sniff (markup, XML prolog, JSON value start) fills in for a
+    missing header only; with neither, the RFC 9110 default
+    ``application/octet-stream``."""
     declared = content_type_mime(header)
     sniffed = sniff_mime(body)
     return (
         F.when(
-            sniffed.isNotNull() & ~sniffed.isin(*_TEXTY_SNIFFS), sniffed
+            sniffed.isNotNull() & ~sniffed.isin(*_WEAK_SNIFFS), sniffed
         )
         .when(declared != "", declared)
         .when(sniffed.isNotNull(), sniffed)

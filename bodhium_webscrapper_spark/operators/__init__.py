@@ -5,6 +5,5 @@ from bodhium_webscrapper_spark.operators.seen import (  # noqa: F401
     build_bloom,
     or_merge_blobs,
     seen_anti_join,
-    seen_anti_join_cached,
 )
 from bodhium_webscrapper_spark.operators.union import source_priority_union  # noqa: F401

@@ -128,8 +128,12 @@ def revalidation_classes(
     Inputs are the previous crawl's stored validators and the refetch's
     response headers, both ``(url, etag, last_modified, content_hash)``.
     Per RFC 9110 §8.8: the ETag is the strong validator and wins when both
-    sides carry one; Last-Modified is the weak fallback when either ETag
-    is absent; with no validators at all the stored content hash decides.
+    sides carry one, compared weakly (§8.8.3.2: an optional ``W/`` prefix
+    is stripped on both sides, so ``W/"a"`` matches ``"a"``); Last-Modified
+    is the weak fallback when either ETag is absent; with no validators at
+    all the stored content hash decides. Each side must hold at most one
+    row per url: the full-outer join would otherwise pair every duplicate
+    and return one status per pair.
     Returns ``(url, status)`` with status in
 
       - ``'not_modified'`` — validators (or hashes) match: skip extract,
@@ -161,7 +165,10 @@ def revalidation_classes(
     both_etags = F.col("_pe").isNotNull() & F.col("_ce").isNotNull()
     both_lm = F.col("_pl").isNotNull() & F.col("_cl").isNotNull()
     matched = (
-        F.when(both_etags, F.col("_pe") == F.col("_ce"))
+        F.when(
+            both_etags,
+            F.regexp_replace("_pe", "^W/", "") == F.regexp_replace("_ce", "^W/", ""),
+        )
         .when(both_lm, F.col("_pl") == F.col("_cl"))
         .otherwise(F.col("_ph").eqNullSafe(F.col("_ch")))
     )

@@ -144,8 +144,10 @@ def hits_fixed_point(
     the mutual-reinforcement sums shuffle-order dependent, so every
     quantity here is an exact bigint. Instead of the classical L2
     normalization (sqrt → irrational), each half-step max-normalizes:
-    ``v' = v div max(greatest(max_v div scale, 1))`` keeping scores in
-    ``[0, scale]`` with ≤1e-6 relative truncation per step — rank ORDER is
+    ``v' = v div greatest((max_v + scale - 1) div scale, 1)`` — the ceiling
+    divisor keeps every score in ``[0, scale]`` (a floor divisor lets
+    ``scale < max_v < 2*scale`` through undivided) with ≤1e-6 relative
+    truncation per step at the default scale — rank ORDER is
     what crawl scheduling consumes and truncating a shared positive
     divisor is order-preserving. The max is computed in-plan (a 1-row agg
     cross-joined back, same shape as the IVF codebook), so the whole thing
@@ -174,7 +176,8 @@ def hits_fixed_point(
             .select(
                 "id",
                 F.expr(
-                    f"coalesce({col}, 0L) div greatest(_mx div {scale}, 1L)"
+                    f"coalesce({col}, 0L) div "
+                    f"greatest((_mx + {scale - 1}L) div {scale}, 1L)"
                 ).cast("long").alias(col),
             )
         )

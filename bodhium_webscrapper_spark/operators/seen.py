@@ -220,33 +220,10 @@ def seen_anti_join(
     confirm of the positives. Without: plain left-anti join.
 
     Pure plan, no caching: the probe subtree feeds both the definite-new and
-    confirmed-new branches and will execute twice inside one action. Loop
-    callers that pay for the probe should use ``seen_anti_join_cached`` and
-    own the cache lifecycle explicitly.
+    confirmed-new branches and will execute twice inside one action.
     """
     seen_keys = seen.select(hash_col)
     if bloom is None:
         return frontier.join(seen_keys, hash_col, "left_anti")
     return _bloom_split_plan(bloom.pre_filter(frontier, hash_col), seen_keys, hash_col)
 
-
-def seen_anti_join_cached(
-    frontier: DataFrame,
-    seen: DataFrame,
-    hash_col: str = "url_hash",
-    bloom: "DistributedBloom | None" = None,
-) -> tuple[DataFrame, DataFrame | None]:
-    """``seen_anti_join`` with the bloom-probe output persisted so it is
-    computed once across the two consuming branches.
-
-    Returns ``(result, cache_handle)``; the CALLER must ``unpersist()`` the
-    handle (when not None) after its action ran — the explicit lifecycle
-    replaces the old hidden ``_bloom_flagged`` attribute, which leaked cache
-    blocks for any caller that didn't know the secret and silently vanished
-    under a transformation.
-    """
-    seen_keys = seen.select(hash_col)
-    if bloom is None:
-        return frontier.join(seen_keys, hash_col, "left_anti"), None
-    flagged = bloom.pre_filter(frontier, hash_col).persist()
-    return _bloom_split_plan(flagged, seen_keys, hash_col), flagged

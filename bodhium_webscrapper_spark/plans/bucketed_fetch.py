@@ -39,6 +39,7 @@ Trade-offs, stated honestly:
 from __future__ import annotations
 
 import os
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -54,18 +55,23 @@ def _abs_path(path: str) -> str:
     return path if "://" in path else os.path.abspath(path)
 
 
-def _enable_bucket_ordering(spark: SparkSession) -> None:
-    """Session setup for this module's bucketed-scan contract: honor the
-    tables' ``sortBy`` metadata at read (off by default since Spark 3.0
-    because MULTI-file buckets need a merge at read — ``write_bucketed``
-    guarantees one file per bucket, exactly the case where the on-disk
-    order elides both join sorts). Set at write/registration time — i.e.
-    when a session opts into bucketed tables — NOT as a side effect of
-    planning a join; other bucketed-table scans in the session see the
-    legacy planner behavior, which is documented here and benign for
-    correctness (Spark still requires single-file buckets to claim order).
-    """
+@contextmanager
+def bucket_ordering(spark: SparkSession):
+    """Honor bucketed tables' ``sortBy`` metadata at read for the queries
+    planned and run inside the block, then restore the session's previous
+    value. Off by default since Spark 3.0 because MULTI-file buckets need a
+    merge at read; ``write_bucketed`` guarantees one file per bucket,
+    exactly the case where the on-disk order elides both join sorts. Only
+    scans of bucketed tables read the setting, so writes need no scope."""
+    prev = spark.conf.get(_ORDERING_CONF, None)
     spark.conf.set(_ORDERING_CONF, "true")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_ORDERING_CONF)
+        else:
+            spark.conf.set(_ORDERING_CONF, prev)
 
 
 def write_bucketed(
@@ -83,7 +89,6 @@ def write_bucketed(
     bucket-sorted table (multi-file buckets must be merge-sorted at read).
     """
     spark = df.sparkSession
-    _enable_bucket_ordering(spark)
     spark.sql(f"DROP TABLE IF EXISTS {table}")
     w = (
         df.repartition(n_buckets, key)
@@ -110,7 +115,6 @@ def register_bucketed(
     one-time bucketing of the pages corpus; the Iceberg analogue is simply
     the table existing in the catalog with a ``bucket(N, key)`` spec.
     ``schema_ddl`` defaults to the parquet footer schema at ``path``."""
-    _enable_bucket_ordering(spark)
     path = _abs_path(path)
     if schema_ddl is None:
         schema_ddl = ", ".join(
@@ -141,16 +145,10 @@ def bucketed_fetch_join(
     either. Parallelism = bucket count; at 10^8-row waves each task
     streams one wave bucket against one pages bucket.
 
-    Requires the session to have opted into bucketed-scan ordering (set by
-    ``write_bucketed``/``register_bucketed``); raises otherwise rather than
-    silently planning two full read-side sorts.
+    The sort elision holds only where the query is planned and run inside
+    ``bucket_ordering(spark)``; outside it the join is still correct but
+    sorts both sides at read.
     """
-    if spark.conf.get(_ORDERING_CONF, "false") != "true":
-        raise ValueError(
-            f"{_ORDERING_CONF} is not set: create the tables in this session "
-            "via write_bucketed()/register_bucketed() (which set it) so the "
-            "join can elide its sorts"
-        )
     pages = spark.table(pages_table)
     wave = spark.table(wave_table).hint("merge")
     return pages.join(wave, key)

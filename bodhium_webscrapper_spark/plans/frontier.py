@@ -16,8 +16,9 @@ materialized:
   frontier_t = explode(page_results_{t-1}.outlinks) ∪ pending misses
                (lazy plan over committed artifacts; wave 0: seeds)
   candidates = dedup(frontier_t)   first-wins per url_hash         [A1]
-  new        = candidates ANTI-JOIN seen (bloom pre-pass + exact;
-               wave 0: an empty relation the optimizer folds away) [J2]
+  new        = candidates ANTI-JOIN seen (broadcast, or exact shuffle
+               above seen_broadcast_threshold; wave 0: an empty
+               relation the optimizer folds away)                  [J2]
   gated      = new ⋈ policy ON host, filter robots verdict,        [U5/W3]
                budget = coalesce(crawl-delay budget, default)
                (policy: the per-host politeness table, built once
@@ -62,7 +63,9 @@ Scale notes (100 TB / 10^10 URLs):
   broadcast-hash-join probe of pages. On Iceberg, pages would be bucketed by
   ``bucket(N, url_hash)`` making this storage-partitioned even for giant
   waves.
-- the seen anti-join sees only bloom positives (vectorized pre-filter).
+- seen is never broadcast past ``seen_broadcast_threshold``: above it the
+  anti-join shuffles both sides by url_hash (exact, no pre-filter — a
+  filter in front could not spare the seen side its exchange).
 - the politeness window is salted two-phase top-k → no mega-host straggler.
 - state (seen/frontier) is read back from the snapshot each wave, keeping
   every wave's plan O(1) and lineage flat (no iterative plan blow-up).
@@ -74,6 +77,7 @@ from __future__ import annotations
 import os
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import nullcontext
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, Window
@@ -87,7 +91,12 @@ from bodhium_webscrapper_spark.operators.politeness import (
     per_host_budget,
 )
 from bodhium_webscrapper_spark.operators.robots import robots_allowed, rules_table
-from bodhium_webscrapper_spark.operators.seen import seen_anti_join_cached
+from bodhium_webscrapper_spark.plans.bucketed_fetch import (
+    bucket_ordering,
+    bucketed_fetch_join,
+    register_bucketed,
+    write_bucketed,
+)
 from bodhium_webscrapper_spark.plans.checkpoint import CHECKPOINT_FORMAT, SnapshotStore
 from bodhium_webscrapper_spark.plans.metrics import lineage_rows_table, observed
 
@@ -145,9 +154,6 @@ class CrawlConfig:
     # table cannot be a broadcast build) — same pattern as
     # broadcast_wave_threshold below
     robots_broadcast_threshold: int = 1_000_000
-    use_bloom: bool = True
-    bloom_buckets: int = 64
-    bloom_capacity: int = 4_000_000  # fixed-width blobs -> OR-mergeable deltas
     # fetch-join broadcast cutover: up to this wave size the scheduled
     # wave broadcasts WITH its numeric attributes (url_hash, depth,
     # priority, wave — 32 B/row, so 4M rows ≈ 128 MB, sized for a standard
@@ -157,7 +163,9 @@ class CrawlConfig:
     # (the broadcast build is driver-serial fixed cost, the shuffle scales
     # with cores). pages never shuffle on either path.
     broadcast_wave_threshold: int = 4_000_000
-    seen_broadcast_threshold: int = 4_000_000  # below: broadcast anti-join, no bloom
+    # seen anti-join cutover: up to this many seen keys the seen side is
+    # broadcast; above it, the exact shuffle anti-join on url_hash
+    seen_broadcast_threshold: int = 4_000_000
     # build the pending-retry artifact driver-side (pyarrow column reads +
     # numpy set difference) while the wave's scheduled set fits comfortably
     # in driver memory; above it, one extra small Spark anti-join job per
@@ -170,20 +178,6 @@ class CrawlConfig:
     # (compressed) footprint; 256 MB compressed ≲ ~1-1.5 GB in memory.
     pending_driver_max_bytes: int = 256 * 1024 * 1024
     salt_activation_threshold: int = 2_000_000  # salt only when frontier is huge
-    # run the SCHEDULE action with adaptive execution disabled. AQE
-    # materializes every exchange of the schedule plan as its own job —
-    # measured (benchmarks/parse_eventlog.py on the 16M-page six-wave):
-    # 6-16 jobs per schedule with a ~2.5 s/wave SERIAL tail of
-    # sub-100ms-compute stage-materialization barriers, pure driver
-    # latency that does not shrink with cores. The giant-scale
-    # configuration turns AQE off for this one action: the plan's physical
-    # choices are already made statically (broadcast hints on the
-    # politeness count-split, explicit salting, size-gated robots
-    # strategy, seen anti-join forced to shuffle at 10^10 keys), so AQE
-    # has nothing left to decide there. Default ON (True = keep AQE):
-    # small/medium crawls DO want the anti-join broadcast-converted when
-    # seen is still tiny, and skew-join coverage for un-salted configs.
-    schedule_aqe: bool = True
     same_host_only: bool = True  # app.py:497 exclude_external_links
     # what "same site" means when same_host_only is on (P4):
     #  "host" = exact host equality (default);
@@ -408,11 +402,6 @@ class CrawlJob:
                     "write_bucketed seam (SnapshotStore has one; implement "
                     "the clustered write for custom stores)"
                 )
-            from bodhium_webscrapper_spark.plans.bucketed_fetch import (
-                register_bucketed,
-                write_bucketed,
-            )
-
             self._pages_table = f"pages_bkt_{job_id}"
             self._wave_table = f"wave_scheduled_{job_id}"
             bpath = config.bucketed_pages_path or os.path.join(
@@ -744,7 +733,6 @@ class CrawlJob:
         wave: int,
         frontier: DataFrame,
         seen: DataFrame,
-        bloom: "object | None",
         n_candidates: int | None = None,
     ) -> WaveStats:
         """Each heavy plan is written straight to the wave snapshot and read
@@ -792,9 +780,8 @@ class CrawlJob:
 
         # schedule: dedup -> seen anti-join -> robots -> per-host budget ->
         # global cap. Adaptive physical choices (all semantics-preserving):
-        # - seen small enough to broadcast -> broadcast-hash anti-join and
-        #   skip the bloom pre-pass (the broadcast probe IS the filter);
-        #   at 10^10 seen keys: bloom pre-pass + shuffle anti-join.
+        # - seen small enough to broadcast -> broadcast-hash anti-join;
+        #   above seen_broadcast_threshold -> exact shuffle anti-join.
         # - host-hash salting only kicks in above an activation threshold —
         #   below it, per-host partitions are small enough that the second
         #   window pass would be pure overhead.
@@ -808,13 +795,10 @@ class CrawlJob:
         # itself (no extra job): read after the write below
         dedup_obs = Observation()
         counted = deduped.observe(dedup_obs, F.count(F.lit(1)).alias("n"))
-        probe_cache = None
+        seen_keys = seen.select("url_hash")
         if self._total_seen <= cfg.seen_broadcast_threshold:
-            new = counted.join(
-                F.broadcast(seen.select("url_hash")), "url_hash", "left_anti"
-            )
-        else:
-            new, probe_cache = seen_anti_join_cached(counted, seen, "url_hash", bloom)
+            seen_keys = F.broadcast(seen_keys)
+        new = counted.join(seen_keys, "url_hash", "left_anti")
         # robots verdict + crawl-delay budget: one join on host against the
         # per-run policy table (see _host_policy)
         gated, budget_col = new, None
@@ -865,23 +849,11 @@ class CrawlJob:
                 cfg.global_wave_limit,
                 takeordered_threshold=cfg.global_cap_takeordered_threshold,
             )
-        if not cfg.schedule_aqe:
-            # one action under static planning: every physical choice in
-            # this plan is already explicit (see CrawlConfig.schedule_aqe);
-            # scoped+restored so no other query inherits the setting
-            prev_aqe = self.spark.conf.get("spark.sql.adaptive.enabled")
-            self.spark.conf.set("spark.sql.adaptive.enabled", "false")
-        try:
-            self.store.write(wave, "scheduled", self._assign_order(capped, wave))
-        finally:
-            if not cfg.schedule_aqe:
-                self.spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        self.store.write(wave, "scheduled", self._assign_order(capped, wave))
         dedup_metrics = observed(dedup_obs)
         # None: the observed stage was dropped (a wave that schedules
         # nothing), and only such a wave counts its deduped frontier itself
         n_deduped = dedup_metrics["n"] if dedup_metrics else deduped.count()
-        if probe_cache is not None:  # bloom probe cache served its one action
-            probe_cache.unpersist()
         if gate_cache is not None:  # count-split cache served the write
             gate_cache.unpersist()
         if cfg.fetch_strategy == "bucketed":
@@ -981,10 +953,6 @@ class CrawlJob:
             # implies the strings match — the engine merges 64-bit
             # collisions identically everywhere), so strings never enter
             # the wave table's bucket shuffle at all.
-            from bodhium_webscrapper_spark.plans.bucketed_fetch import (
-                bucketed_fetch_join,
-            )
-
             joined = bucketed_fetch_join(
                 self.spark, self._pages_table, self._wave_table
             )
@@ -1033,7 +1001,11 @@ class CrawlJob:
             if cfg.verify_extraction:
                 final_cols.append("golden_ok")
             fetch_plan = raw.join(attrs, "url_hash").select(*final_cols)
-        self.store.write(wave, "page_results", fetch_plan)
+        # the bucketed join elides its sorts only while it plans and runs
+        # under bucket_ordering (scoped: the session value is restored)
+        bucketed = cfg.fetch_strategy == "bucketed"
+        with bucket_ordering(self.spark) if bucketed else nullcontext():
+            self.store.write(wave, "page_results", fetch_plan)
         n_fetched = self.store.row_count(wave, "page_results")  # footer, no job
         if cfg.verify_extraction:
             results = self.store.read(self.spark, wave, "page_results")
@@ -1073,7 +1045,7 @@ class CrawlJob:
         # every job AFTER the loop (bench queries, compaction, user code in
         # the same session) would be attributed to "w<N>:count_next" in the
         # event log — corrupting the very per-phase decomposition
-        # (benchmarks/parse_eventlog.py) the labels exist to enable
+        # (perfbench/eventlog.py) the labels exist to enable
         sc.setJobDescription(None)
 
         stats = WaveStats(
@@ -1180,23 +1152,10 @@ class CrawlJob:
                 self._finalize_err = None
                 raise err
 
-    def _materialize_bloom(self, bloom, wave: int) -> None:
-        """Write the merged blob table and re-read it: executor-side state,
-        flat lineage, resumable. Blob bytes never transit the driver."""
-        self.store.write(wave, "bloom", bloom.blobs)
-        bloom.blobs = self.store.read(self.spark, wave, "bloom")
-
     def run(self, resume: bool = False) -> dict:
         """Run (or resume) the wave loop; returns a summary dict."""
-        from bodhium_webscrapper_spark.operators.seen import DistributedBloom
-
         cfg = self.config
         committed = self.store.committed_wave()
-        bloom = (
-            DistributedBloom(self.spark, cfg.bloom_buckets, cfg.bloom_capacity)
-            if cfg.use_bloom
-            else None
-        )
         n_frontier: int | None = None  # derived count; None = seeds wave
         self._resumed_at = committed + 1 if (resume and committed >= 0) else -1
         # seeds-wave marker: wave 0 of a fresh run is the only wave whose
@@ -1249,7 +1208,6 @@ class CrawlJob:
         total_candidates = 0
         waves_run = []
         loop_overhead: list[float] = []
-        bloom_hydrated_upto = -1
         t_tail = time.time()
         for wave in range(start, cfg.max_waves):
             loop_overhead.append(round(time.time() - t_tail, 3))
@@ -1272,21 +1230,7 @@ class CrawlJob:
                         policy.result()
             if n_frontier == 0:
                 break
-            state = None
-            if bloom is not None and self._total_seen > cfg.seen_broadcast_threshold:
-                # bloom only earns its keep once seen outgrows the broadcast
-                # anti-join; hydrate lazily — from the last committed bloom
-                # artifact when one exists (resume), else one O(seen) build —
-                # then incremental O(delta) afterwards
-                if bloom_hydrated_upto < wave - 1 and wave > 0:
-                    if self.store.has_artifact(wave - 1, "bloom"):
-                        bloom.blobs = self.store.read(self.spark, wave - 1, "bloom")
-                    else:
-                        bloom.add_delta(self._seen_upto(wave - 1))
-                        self._materialize_bloom(bloom, wave - 1)
-                bloom_hydrated_upto = wave - 1
-                state = bloom.state()
-            stats = self._run_wave(wave, frontier, seen, state, n_candidates=n_frontier)
+            stats = self._run_wave(wave, frontier, seen, n_candidates=n_frontier)
             if seed_cache is not None:  # seeds wave committed; cache served
                 seed_cache.unpersist()  # its count + schedule actions
                 seed_cache = None
@@ -1295,8 +1239,7 @@ class CrawlJob:
             total_scheduled += stats.scheduled
             total_candidates += stats.candidates
             self._total_seen = total_scheduled
-            # re-read state from the snapshot: flat lineage, O(1) plans;
-            # bloom absorbs only the new delta (O(wave), not O(seen))
+            # re-read state from the snapshot: flat lineage, O(1) plans
             if cfg.compact_seen_every and (wave + 1) % cfg.compact_seen_every == 0:
                 # compaction rewrites the scheduled delta dirs the in-flight
                 # finalize thread is reading footers from — settle it first
@@ -1305,24 +1248,6 @@ class CrawlJob:
             frontier = self._frontier_after(wave)
             n_frontier = stats.next_candidates
             seen = self._seen_upto(wave)
-            # incremental bloom maintenance ONLY while the bloom regime is
-            # active (seen too big to broadcast) — in the broadcast regime
-            # the bloom is never probed, and building/merging/writing blobs
-            # there would re-add fixed per-wave jobs for nothing; if the
-            # regime activates later, the lazy-hydration branch above
-            # catches up from the last artifact or one O(seen) build
-            if (
-                bloom is not None
-                and self._total_seen > cfg.seen_broadcast_threshold
-                and bloom_hydrated_upto == wave - 1
-            ):
-                bloom.add_delta(
-                    self.store.read(self.spark, wave, "scheduled").select("url_hash")
-                )
-                # materialize the merged blob table (small: n_buckets rows)
-                # so lineage stays flat and resume rehydrates in O(1)
-                self._materialize_bloom(bloom, wave)
-                bloom_hydrated_upto = wave
 
         if seed_cache is not None:  # empty-seeds break before wave 0 ran
             seed_cache.unpersist()

@@ -62,7 +62,6 @@ def main() -> int:
     p.add_argument("--max-waves", type=int, default=6)
     p.add_argument("--global-wave-limit", type=int, default=5000)
     p.add_argument("--resume", action="store_true", help="resume from last committed wave")
-    p.add_argument("--no-bloom", action="store_true")
     p.add_argument("--rank-priority-every", type=int, default=0,
                    help="blend fixed-point PageRank authority into frontier "
                         "priorities every N waves (0 = off, decay-only)")
@@ -190,7 +189,6 @@ def main() -> int:
         max_urls_per_host_per_wave=args.budget,
         max_waves=args.max_waves,
         global_wave_limit=args.global_wave_limit,
-        use_bloom=not args.no_bloom,
         verify_extraction=args.verify_extraction,
         fetch_strategy=args.fetch_strategy,
         fetch_buckets=args.fetch_buckets,

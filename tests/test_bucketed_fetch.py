@@ -13,9 +13,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from bodhium_webscrapper_spark.plans.bucketed_fetch import (
+    _ORDERING_CONF,
+    bucket_ordering,
     bucketed_fetch_join,
     write_bucketed,
 )
+from bodhium_webscrapper_spark.plans.frontier import CrawlConfig, CrawlJob
 
 
 def plan_of(df) -> str:
@@ -47,8 +50,11 @@ def bucketed_tables(spark, crawl_fixture, tmp_path_factory):
 
 
 def test_bucketed_join_zero_exchange_zero_sort(spark, bucketed_tables):
+    before = spark.conf.get(_ORDERING_CONF, None)
     joined = bucketed_fetch_join(spark, "pages_bkt", "wave_bkt")
-    p = plan_of(joined)
+    with bucket_ordering(spark):
+        p = plan_of(joined)
+    assert spark.conf.get(_ORDERING_CONF, None) == before
     assert "SortMergeJoin" in p
     assert "Exchange" not in p  # no shuffle AND no broadcast anywhere
     tree = p.split("\n\n")[0]
@@ -67,3 +73,27 @@ def test_bucketed_join_rows_identical_to_broadcast(spark, bucketed_tables):
     assert bucketed.count() == broadcast.count() > 0
     assert bucketed.exceptAll(broadcast).isEmpty()
     assert broadcast.exceptAll(bucketed).isEmpty()
+
+
+@pytest.mark.parametrize("preset", [None, "false"])
+def test_bucketed_crawl_restores_session_conf(spark, crawl_fixture, tmp_path, preset):
+    """A fetch_strategy="bucketed" crawl scopes the bucketed-scan ordering
+    conf to its fetch actions: afterwards the session reads exactly as it
+    did before the run, whether the conf was unset or set explicitly."""
+    if preset is None:
+        spark.conf.unset(_ORDERING_CONF)
+    else:
+        spark.conf.set(_ORDERING_CONF, preset)
+    job = CrawlJob(
+        spark,
+        crawl_fixture["pages"],
+        spark.read.parquet(crawl_fixture["seeds"]),
+        spark.read.parquet(crawl_fixture["robots"]),
+        CrawlConfig(max_waves=2, fetch_strategy="bucketed", fetch_buckets=8),
+        os.path.join(str(tmp_path), "bkt_conf"),
+    )
+    try:
+        assert job.run()["total_scheduled"] > 0
+        assert spark.conf.get(_ORDERING_CONF, None) == preset
+    finally:
+        spark.conf.unset(_ORDERING_CONF)

@@ -130,19 +130,6 @@ def test_resume_determinism(spark, crawl_fixture, tmp_path):
     assert a == b
 
 
-def test_bloom_off_identical(spark, crawl_fixture, tmp_path):
-    # threshold 0 forces the bloom + shuffle anti-join path (the 10^10
-    # regime); default config would take the broadcast path at test scale
-    on = _mk_job(
-        spark, crawl_fixture, tmp_path, "bon",
-        use_bloom=True, seen_broadcast_threshold=0,
-    )
-    on.run()
-    off = _mk_job(spark, crawl_fixture, tmp_path, "boff", use_bloom=False)
-    off.run()
-    assert _order_tuples(on) == _order_tuples(off)
-
-
 def test_crash_mid_wave_resume(spark, crawl_fixture, tmp_path):
     """A crash AFTER wave files are written but BEFORE the manifest commit
     must leave the store resumable: the partial wave dir is ignored,
@@ -240,47 +227,41 @@ def test_lineage_events(spark, crawl_fixture, tmp_path):
     assert int(row["details"]["scheduled"]) > 0
 
 
-def test_bloom_resume_rehydrates_from_artifact(spark, crawl_fixture, tmp_path):
-    """Resume in the bloom regime must rehydrate the blob table from the
-    last committed wave's bloom artifact (O(1) read, no full-seen rebuild)
-    and still replay the identical crawl order."""
-    import os as _os
-
-    full = _mk_job(
-        spark, crawl_fixture, tmp_path, "bfull",
-        use_bloom=True, seen_broadcast_threshold=0,
-    )
+def test_shuffle_seen_resume_identical(spark, crawl_fixture, tmp_path):
+    """Resume with the exact shuffle anti-join (threshold 0: the path past
+    seen_broadcast_threshold) must replay the identical crawl order from
+    the committed scheduled deltas alone — no wave writes any artifact
+    beyond them (in particular no ``bloom`` directory)."""
+    full = _mk_job(spark, crawl_fixture, tmp_path, "sfull", seen_broadcast_threshold=0)
     full.run()
 
     partial = _mk_job(
-        spark, crawl_fixture, tmp_path, "bpart",
-        use_bloom=True, seen_broadcast_threshold=0, max_waves=2,
+        spark, crawl_fixture, tmp_path, "spart", seen_broadcast_threshold=0, max_waves=2
     )
     partial.run()
-    # the partial run materialized a bloom artifact for its last wave
-    assert _os.path.exists(partial.store.wave_dir(1, "bloom"))
+    assert partial.store.committed_wave() == 1
 
-    resumed = _mk_job(
-        spark, crawl_fixture, tmp_path, "bpart",
-        use_bloom=True, seen_broadcast_threshold=0,
-    )
+    resumed = _mk_job(spark, crawl_fixture, tmp_path, "spart", seen_broadcast_threshold=0)
     resumed.run(resume=True)
+    assert resumed.store.committed_wave() == full.store.committed_wave() >= 2
     assert _order_tuples(resumed) == _order_tuples(full)
+    for job in (full, resumed):
+        for wave in range(job.store.committed_wave() + 1):
+            assert not os.path.exists(job.store.wave_dir(wave, "bloom")), wave
 
 
 def test_physical_knobs_preserve_order(spark, crawl_fixture, tmp_path):
     """Every adaptive physical choice in the wave loop (host-hash salting,
-    attr-join broadcast vs shuffle, bloom pre-filter, broadcast vs shuffle
-    anti-join) is an optimization, not a semantics change: the crawl order
-    must be bit-identical under all of them."""
+    attr-join broadcast vs shuffle, broadcast vs shuffle anti-join) is an
+    optimization, not a semantics change: the crawl order must be
+    bit-identical under all of them."""
     base = _mk_job(spark, crawl_fixture, tmp_path, "k_base")
     base.run()
     expected = _order_tuples(base)
     variants = {
         "k_salt": dict(salt_activation_threshold=0, salt_buckets=8),
         "k_shuffle_attrs": dict(broadcast_wave_threshold=0),
-        "k_shuffle_seen": dict(seen_broadcast_threshold=0, use_bloom=False),
-        "k_bloom": dict(seen_broadcast_threshold=0, use_bloom=True),
+        "k_shuffle_seen": dict(seen_broadcast_threshold=0),
         "k_shuffle_robots": dict(robots_broadcast_threshold=0),
     }
     for name, knobs in variants.items():

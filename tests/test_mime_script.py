@@ -42,6 +42,14 @@ def test_mime_texty_sniff_does_not_contradict(spark):
     assert r.eff == "application/xhtml+xml" and r.keep is True
 
 
+def test_mime_weak_json_sniff_keeps_declared_text(spark):
+    r = _one(spark, "text/plain", "[DRAFT] notes")
+    assert r.sniffed == "application/json"
+    assert r.eff == "text/plain" and r.keep is True
+    r = _one(spark, None, '{"a": 1}')
+    assert r.eff == "application/json" and r.keep is False
+
+
 def test_mime_missing_header_sniff_fills(spark):
     r = _one(spark, None, "  <HTML><body>x")
     assert r.mime == "" and r.sniffed == "text/html"

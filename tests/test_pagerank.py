@@ -78,6 +78,26 @@ def test_hits_hand_computed_two_iterations(spark):
     }
 
 
+def test_hits_ceiling_divisor_keeps_scores_in_scale(spark):
+    # 1->3, 2->3, 1->4; scale=1e6. auth_raw = {3: 2e6, 4: 1e6} -> div 2;
+    # hub_raw = {1: 1.5e6, 2: 1e6}: scale < mx < 2*scale, so the ceiling
+    # divisor is 2 (a floor divisor of 1 would leave hub 1 at 1.5e6)
+    from bodhium_webscrapper_spark.operators.pagerank import hits_fixed_point
+
+    e = _edges(spark, [(1, 3), (2, 3), (1, 4)])
+    got = {r["id"]: (r["hub"], r["auth"]) for r in
+           hits_fixed_point(e, iterations=1).collect()}
+    assert got == {
+        1: (750_000, 0),
+        2: (500_000, 0),
+        3: (0, 1_000_000),
+        4: (0, 500_000),
+    }
+    for scale in (7, 1_000_000):
+        rows = hits_fixed_point(e, iterations=3, scale=scale).collect()
+        assert all(0 <= r["hub"] <= scale and 0 <= r["auth"] <= scale for r in rows)
+
+
 def test_hits_determinism_and_checkpoint(spark):
     from bodhium_webscrapper_spark.operators.pagerank import hits_fixed_point
 

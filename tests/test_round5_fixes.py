@@ -720,21 +720,3 @@ def test_dedup_narrow_exchange_row_identical(spark):
     assert got.columns == base.columns
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, legacy.collect()))
 
-
-def test_schedule_static_planning_identical(spark, crawl_fixture, tmp_path):
-    """schedule_aqe=False (static planning for the schedule action) must be
-    a pure physical-plan choice: crawl order and extracted rows identical
-    to the default AQE loop, and the session's AQE conf restored after."""
-    tmp = str(tmp_path)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    ja, sa = _run_job(spark, crawl_fixture, tmp, "r5_aqe")
-    js, ss = _run_job(spark, crawl_fixture, tmp, "r5_static", schedule_aqe=False)
-    assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
-    assert sa["total_scheduled"] == ss["total_scheduled"] > 0
-    assert [tuple(r) for r in ja.crawl_order().collect()] == [
-        tuple(r) for r in js.crawl_order().collect()
-    ]
-    res_a = ja.extracted().select("url_hash", "canonical_url", "wave", "text")
-    res_s = js.extracted().select("url_hash", "canonical_url", "wave", "text")
-    assert res_a.exceptAll(res_s).isEmpty()
-    assert res_s.exceptAll(res_a).isEmpty()

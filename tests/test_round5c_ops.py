@@ -98,6 +98,7 @@ def test_revalidation_classes_all_branches(spark):
             ("u7", 'W/"g"', None, "h7"),    # gone (prev only)
             # prev has etag, curr doesn't -> weak fallback decides
             ("u9", 'W/"z"', "Mon", "h9"),
+            ("u10", 'W/"a"', "Mon", "h10"),  # weak vs strong same tag -> match
         ],
         "url string, etag string, last_modified string, content_hash string",
     )
@@ -111,6 +112,7 @@ def test_revalidation_classes_all_branches(spark):
             ("u6", None, None, "HX"),
             ("u8", 'W/"n"', "Mon", "h8"),   # new (curr only)
             ("u9", None, "Mon", "h9x"),
+            ("u10", '"a"', "Tue", "h10x"),
         ],
         "url string, etag string, last_modified string, content_hash string",
     )
@@ -125,6 +127,7 @@ def test_revalidation_classes_all_branches(spark):
         "u7": "gone",
         "u8": "new",
         "u9": "not_modified",
+        "u10": "not_modified",
     }
 
 

@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from bodhium_webscrapper_spark.operators.seen import (
     DistributedBloom,
     seen_anti_join,
-    seen_anti_join_cached,
 )
 
 
@@ -92,19 +91,3 @@ def test_distributed_bloom_delta_merge_matches_exact(spark):
     flagged = bloom.pre_filter(seen.select("url_hash"), "url_hash")
     assert flagged.filter(~F.col("_maybe_seen")).count() == 0
 
-
-def test_seen_anti_join_cached_handle(spark):
-    """The cached variant must return the probe cache handle explicitly,
-    matching the plain variant's rows; the caller owns unpersist()."""
-    frontier, seen = _dfs(spark)
-    plain, no_handle = seen_anti_join_cached(frontier, seen)
-    assert no_handle is None
-
-    bloom = _bloom(spark, seen)
-    out, handle = seen_anti_join_cached(frontier, seen, bloom=bloom)
-    assert handle is not None
-    got = {r.payload for r in out.collect()}
-    assert got == {r.payload for r in plain.collect()}
-    assert handle.is_cached
-    handle.unpersist()
-    assert not handle.is_cached
