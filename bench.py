@@ -1,35 +1,40 @@
-"""Benchmark harness.
+"""Benchmark: headline query walls plus the checked crawl + curation benchmark.
 
-Measures (1) frontier throughput — URLs scheduled+deduped per second over
-the full wave loop on a synthetic Common-Crawl-style pages table — at TWO
-parallelism levels (local[4] vs local[16], best-of-reps) on identical input,
-standing in for the N vs 4N executor-cluster sizes of the north rule, with a
-per-wave efficiency-vs-wave-size curve; (2) per-operator stage scaling; and
-(3) wall-clock of the headline __spark_entry__ queries at $SPARK_GRAFT_SF_DIR.
+    SPARK_GRAFT_SF_DIR=<dir with the sf tables> SPARK_GRAFT_CPUS=4 python bench.py
 
-Prints ONE JSON line:
-  {"metric": ..., "value": <total seconds>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": ...,
-   "frontier": {"local[4]": {...}, "local[16]": {...},
-                "scaling_efficiency": E, "per_wave_efficiency": [...]},
-   "stage_scaling": {...}}
+1. Times the ``HEADLINE`` ``__spark_entry__`` queries over the tables in
+   ``$SPARK_GRAFT_SF_DIR`` on one ``local[$SPARK_GRAFT_CPUS]`` session
+   (default: every CPU this process may use), each query's result counted
+   once.
+2. Runs perfbench (perfbench/README.md), the benchmark whose crawl outputs
+   are checked against ``perfbench/expected.json``, as subprocesses at seed
+   ``SEED``: ``crawl_wide --trace 1`` and ``curation_suite --trace 0``.
+3. Prints one JSON line:
+     {"metric": "headline_query_wall", "value": <sum of query walls>,
+      "unit": "sec", "sf": ..., "queries": {<query>: <sec>},
+      "perfbench": {"seed": ..., "crawl_wide": {...}, "curation_suite": {...}},
+      "layers": {<per-layer name>: <value>}}
 
-Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (default 32), SPARK_GRAFT_BENCH_PAGES (default 8000000),
-SPARK_GRAFT_BENCH_REPS (default 2), SPARK_GRAFT_BENCH_N (default 4),
-SPARK_GRAFT_SKIP_SCALING=1 to skip the two-level frontier run.
+Each perfbench entry carries ``correct``, ``failed``, ``setup_s``, ``run_s``
+and ``items_per_s``. ``curation_suite`` reports them itself; ``crawl_wide``'s
+come from its traced run, whose first pass is the timed run's pass:
+``run_s`` = ``trace.cold_run_s``, ``items_per_s`` = ``funnel.candidates /
+run_s`` and ``setup_s`` = ``session.start_s + frontier.init_s`` (a sum of
+medians where the timed run takes the median of sums). ``layers`` holds the
+traced run's non-zero crawl figures (``frontier.scaling_1_to_n`` among
+them). Only ``SPARK_GRAFT_SF_DIR`` and ``SPARK_GRAFT_CPUS`` are read.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-BENCH_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "build", "bench")
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 HEADLINE = [
     "pushdown_agg",
@@ -60,950 +65,85 @@ HEADLINE = [
     "dsir_select",
 ]
 
-
-def _stop(spark):
-    """Stop a session after a short drain grace: task-completion events can
-    still be flushing Python accumulator updates right after the last action,
-    and stopping mid-flush dumps a harmless-but-noisy
-    PythonAccumulatorV2.merge stack trace into the bench output."""
-    time.sleep(2.0)
-    spark.stop()
-
-
-FETCH_BUCKETS = 64
-
-
-def _steal_ticks() -> int:
-    with open("/proc/stat") as f:
-        return int(f.readline().split()[8])
-
-
-def host_probe(work: int = 20_000_000, lo: int = 4, hi: int = 16) -> dict:
-    """Engine-independent host-state calibration for the N-vs-4N numbers:
-    identical register-only busy loops (zero memory traffic, zero JVM, zero
-    Spark) pinned one process per core, run at ``lo`` and at ``hi``
-    processes. ``parity`` = wall(lo)/wall(hi); on dedicated hardware it is
-    1.0 by construction (each process does fixed work on its own core), so
-    any deficit is the HYPERVISOR — vCPU steal or host-level frequency/
-    co-tenant contention — a per-core ceiling that NO engine code can
-    beat and that multiplies directly into every measured lo→hi efficiency.
-    Recorded alongside each bench so the artifact is self-calibrating.
-
-    The probe MUST run at the measurement's own core counts: the round-5
-    pair runs caught the 2→8 control reading mid-band (0.703) in the same
-    minutes the 4-vs-16 parity read 0.707 — the two thread-count regimes
-    decouple (16 threads hits the host's frequency/saturation behavior
-    that 8 threads does not), so a 4v16 probe is the wrong instrument for
-    a 2→8 record and vice versa."""
-    import subprocess
-
-    code = (
-        "import os,sys\n"
-        "os.sched_setaffinity(0, {int(sys.argv[1])})\n"
-        "x = 0\n"
-        f"for i in range({work}):\n"
-        "    x = (x * 1103515245 + 12345) & 0xffffffff\n"
-    )
-
-    def phase(nproc: int) -> tuple[float, float]:
-        s0 = _steal_ticks()
-        t0 = time.time()
-        ps = [
-            subprocess.Popen([sys.executable, "-c", code, str(i)])
-            for i in range(nproc)
-        ]
-        for p in ps:
-            p.wait()
-        wall = time.time() - t0
-        return wall, (_steal_ticks() - s0) / (wall * nproc * 100)
-
-    wlo, stlo = phase(lo)
-    whi, sthi = phase(hi)
-    return {
-        f"wall{lo}": round(wlo, 2),
-        f"wall{hi}": round(whi, 2),
-        "parity": round(wlo / whi, 3),
-        f"steal{lo}": round(stlo, 3),
-        f"steal{hi}": round(sthi, 3),
-    }
-
-
-def membw_probe(lo: int = 4, hi: int = 16, mb: int = 64, reps: int = 40) -> dict:
-    """Memory-BANDWIDTH parity at the pair's two core counts — the probe
-    the register-only ``host_probe`` cannot be: per-core memcpy loops
-    (one process per core, ~``reps * mb`` MB of traffic each) measure how
-    much slower a memory-bound task runs per core when ``hi`` cores share
-    the socket's memory controllers vs ``lo``.
-
-    Measured on this host: parity ≈ 0.45-0.60 at 4→16 (a memory-bound
-    stage runs ~2x slower per core at 16 busy cores), while the register
-    parity reads 0.95. This single number explains the six-wave schedule
-    stage's ~1.66x task-TIME inflation at local[16] (its explode + string
-    shuffle is bandwidth-bound) against the fetch stage's flat task time
-    (Python-side compute-bound): the residual 4→16 inefficiency is the
-    shared bus, not the plan. A real cluster's 16 cores span 4+ nodes
-    with their own memory controllers — this ceiling is a single-box
-    artifact, which is why the recorded pairs also include the
-    bus-unconfounded 2→8 regime (BENCH/BASELINE.md §2.7)."""
-    import subprocess
-
-    code = (
-        "import numpy as np, sys, os, time\n"
-        "os.sched_setaffinity(0, {int(sys.argv[1])})\n"
-        f"a = np.empty({mb}*1024*1024, dtype=np.uint8); b = np.empty_like(a)\n"
-        "t0 = time.time()\n"
-        f"for _ in range({reps}): b[:] = a\n"
-        "print(time.time() - t0)\n"
-    )
-
-    def phase(nproc: int) -> float:
-        ps = [
-            subprocess.Popen(
-                [sys.executable, "-c", code, str(i)], stdout=subprocess.PIPE
-            )
-            for i in range(nproc)
-        ]
-        return max(float(p.communicate()[0]) for p in ps)
-
-    wlo, whi = phase(lo), phase(hi)
-    return {
-        f"membw_wall{lo}": round(wlo, 2),
-        f"membw_wall{hi}": round(whi, 2),
-        "membw_parity": round(wlo / whi, 3),
-    }
-
-
-def _giant_fetch() -> str:
-    """Fetch strategy of the giant-wave configuration: bucketed by default
-    (the measured-faster zero-broadcast path at 10^7-row waves,
-    BENCH/BASELINE.md §2.4); override with SPARK_GRAFT_GIANT_FETCH."""
-    return os.environ.get("SPARK_GRAFT_GIANT_FETCH", "bucketed")
-
-
-def _fixture(n_pages: int):
-    from bodhium_webscrapper_spark.session import build_session
-    from bodhium_webscrapper_spark.sources.datagen import (
-        generate_crawl_fixture,
-        prepare_pages,
-    )
-
-    out = os.path.join(BENCH_DIR, f"pages_{n_pages}")
-    paths = generate_crawl_fixture(out, n_pages=n_pages)
-    if not os.path.exists(os.path.join(out, "pages", "_SUCCESS")):
-        spark = build_session("local[32]", "bench_prep", 32)
-        prepare_pages(spark, paths["pages_raw"], os.path.join(out, "pages"), n_files=64)
-        _stop(spark)
-    fixture = {**paths, "pages": os.path.join(out, "pages")}
-    # one-time bucketed pages layout (amortized corpus rewrite, built
-    # unpinned at full width — prep, not measurement; every pinned run
-    # re-attaches it metadata-only via register_bucketed)
-    bkt = os.path.join(out, f"pages_bkt{FETCH_BUCKETS}")
-    needs_bkt = (
-        os.environ.get("SPARK_GRAFT_BENCH_FETCH") == "bucketed"
-        or (_giant_fetch() == "bucketed"
-            and os.environ.get("SPARK_GRAFT_SKIP_GIANT") != "1")
-    )
-    if needs_bkt and not os.path.exists(os.path.join(bkt, "_SUCCESS")):
-        from pyspark.sql import functions as F
-
-        from bodhium_webscrapper_spark.plans.bucketed_fetch import write_bucketed
-
-        spark = build_session("local[32]", "bench_bkt_prep", 32)
-        pages = spark.read.parquet(fixture["pages"]).select("url_hash", "url", "html")
-        write_bucketed(pages, "bench_pages_bkt_prep", FETCH_BUCKETS, bkt)
-        spark.sql("DROP TABLE IF EXISTS bench_pages_bkt_prep")
-        _stop(spark)
-    fixture["pages_bkt"] = bkt
-    return fixture
-
-
-def run_frontier(
-    master: str, fixture: dict, tag: str, n_pages: int, extra_env: dict | None = None
-) -> dict:
-    """Run one frontier measurement in a CPU-PINNED subprocess.
-
-    local[N] in one shared JVM is not N cores: a pandas-UDF stage runs ~2N
-    threads (N JVM task threads + N python workers), so the low-parallelism
-    level silently borrows idle cores of this 32-core box and the measured
-    scaling efficiency is deflated. Pinning each run's process tree (JVM +
-    python workers inherit the affinity) to exactly N cores reproduces what
-    a real N-core executor allocation enforces.
-    """
-    import subprocess
-
-    cmd = [sys.executable, os.path.abspath(__file__),
-           "--pinned-frontier", master, tag, str(n_pages)]
-    env = {**os.environ, **(extra_env or {})}
-    r = subprocess.run(cmd, capture_output=True, text=True, env=env,
-                       cwd=os.path.dirname(os.path.abspath(__file__)))
-    for line in reversed(r.stdout.splitlines()):
-        if line.startswith("BENCHJSON:"):
-            return json.loads(line[len("BENCHJSON:"):])
-    raise RuntimeError(f"pinned frontier run failed: {r.stderr[-2000:]}")
-
-
-def _pin_to(n: int) -> None:
-    try:
-        os.sched_setaffinity(0, set(range(n)))
-    except (AttributeError, OSError):
-        pass  # non-linux fallback: unpinned
-
-
-def _run_frontier_inproc(master: str, fixture: dict, tag: str) -> dict:
-    import shutil
-
-    from bodhium_webscrapper_spark.plans.frontier import CrawlConfig, CrawlJob
-    from bodhium_webscrapper_spark.session import build_session
-
-    ckpt = os.path.join(BENCH_DIR, f"ckpt_{tag}")
-    shutil.rmtree(ckpt, ignore_errors=True)
-    n = int(master[len("local[") : -1])
-    # diagnostic-only hook: SPARK_GRAFT_EVENTLOG_DIR=<dir> writes the Spark
-    # event log so per-job walls / task-time sums / driver gaps can be
-    # decomposed offline (perfbench/eventlog.py). Off for recorded
-    # scaling pairs — logging itself adds driver-serial work.
-    extra_conf = None
-    ev_dir = os.environ.get("SPARK_GRAFT_EVENTLOG_DIR")
-    if ev_dir:
-        os.makedirs(ev_dir, exist_ok=True)
-        extra_conf = {"spark.eventLog.enabled": "true",
-                      "spark.eventLog.dir": ev_dir}
-    spark = build_session(master, f"bench_frontier_{tag}", shuffle_partitions=n,
-                          extra_conf=extra_conf)
-    # few, very large waves: the representative regime of the 10^10-URL
-    # target, where per-wave fixed latency is negligible vs per-URL work.
-    # seen_broadcast_threshold=0 forces the SHUFFLE anti-join — the only
-    # path that exists at 10^10 seen keys (a broadcast of the seen set is
-    # physically impossible there), and the one whose cost scales with
-    # cores instead of serializing through the driver.
-    budget = int(os.environ.get("SPARK_GRAFT_BENCH_BUDGET", "50000"))
-    max_waves = int(os.environ.get("SPARK_GRAFT_BENCH_WAVES", "6"))
-    cfg = CrawlConfig(
-        max_urls_per_host_per_wave=budget,
-        max_waves=max_waves,
-        global_wave_limit=None,
-        salt_buckets=16,
-        seen_broadcast_threshold=0,
-        # fused-broadcast fetch up to this wave size. The engine default
-        # (4M rows ≈ 128 MB) is sized for 4-8 GB cluster executors; this
-        # sandbox's single 48 GB JVM comfortably holds a 10^7-row (~320 MB)
-        # attrs broadcast, and the fused path measured ~30% faster at
-        # local[16] than the semi-join + attrs-shuffle fallback for a
-        # 6.9M-row wave (benchmarks/probe_fetch_variants.py).
-        broadcast_wave_threshold=int(
-            os.environ.get("SPARK_GRAFT_BENCH_BCAST", "30000000")
-        ),
-        # SEED_ALL seeds from the engine's own canonical URL dump, so wave
-        # 0 may skip the canonicalization UDF (pure-JVM keying) — the
-        # full-recrawl configuration
-        seeds_canonical=os.environ.get("SPARK_GRAFT_BENCH_SEED_ALL") == "1",
-        # ...and duplicate-free by construction (the variant rows are
-        # filtered below), so the seeds wave skips the A1 dedup window —
-        # the full-recrawl schedule stage's dominant exchange+sort
-        seeds_distinct=os.environ.get("SPARK_GRAFT_BENCH_SEED_ALL") == "1",
-        # bucketed = the zero-broadcast storage-partitioned fetch: the wave
-        # table is written bucketBy(url_hash) and streams bucket-vs-bucket
-        # against the pre-bucketed pages layout — no driver-serial
-        # broadcast build, the giant-wave default (see _giant_fetch)
-        fetch_strategy=os.environ.get("SPARK_GRAFT_BENCH_FETCH", "broadcast"),
-        fetch_buckets=FETCH_BUCKETS,
-        bucketed_pages_path=os.path.join(
-            os.path.dirname(fixture["pages"]), f"pages_bkt{FETCH_BUCKETS}"
-        ),
-    )
-    # SEED_ALL: seed the full URL dump instead of the host roots — the
-    # full-recrawl configuration. One wave then schedules+fetches+extracts
-    # ~the whole pages table (10^7 rows here), the direct analogue of a
-    # 10^8-row wave on a 1000-executor cluster: per-wave fixed latency is
-    # amortized into minutes of scalable stage work. The dump's ~3%
-    # deliberately NON-canonical variant rows (https://WWW.host:443/...,
-    # datagen.py:166-167) are filtered out: seeds_canonical declares a
-    # truly-canonical seed list, and keying the variants as distinct URLs
-    # would overstate canonical-equivalent work (r4 advice).
-    from pyspark.sql import functions as _F
-
-    seeds = (
-        spark.read.parquet(fixture["pages"])
-        .selectExpr("url", "cast(1.0 as double) as priority")
-        .filter(~_F.col("url").rlike("WWW|:443"))
-        if os.environ.get("SPARK_GRAFT_BENCH_SEED_ALL") == "1"
-        else spark.read.parquet(fixture["seeds_full"])
-    )
-    job = CrawlJob(
-        spark,
-        fixture["pages"],
-        seeds,
-        spark.read.parquet(fixture["robots"]),
-        cfg,
-        ckpt,
-    )
-    # warm-up OUTSIDE the measurement: python-worker spawn and whole-stage
-    # codegen are per-session one-offs a long-running cluster amortizes to
-    # zero; measuring them in wave 0 would compare JVM warmup, not the loop
-    from pyspark.sql import functions as F
-
-    from bodhium_webscrapper_spark.functions.canonicalize import (
-        resolve_and_canonicalize_udf,
-    )
-
-    warm = spark.range(2000).select(
-        F.concat(F.lit("/w"), F.col("id").cast("string")).alias("u"),
-        F.lit("https://warm.example/").alias("b"),
-    )
-    warm.select(resolve_and_canonicalize_udf("u", "b").alias("c")).select(
-        F.count("c")
-    ).first()
-    # one representative pass over the pages table with the JOB'S OWN
-    # projection and fused UDF, sampled across EVERY scan partition:
-    # - warms the OS page cache with exactly the columns the waves read
-    #   (one disk here; a real cluster's aggregate scan bandwidth grows
-    #   with its size, so cold-read time is not an engine property)
-    # - spawns the full python-worker pool and compiles the real codegen
-    #   (per-session one-offs a long-running cluster amortizes to zero;
-    #   the old limit(500) warmup spawned ONE worker, so wave 0 measured
-    #   the other N-1 worker forks + imports)
-    # - materializes the persisted politeness artifacts (rules/budgets)
-    pages_src = (
-        spark.table(job._pages_table)  # warm the files the fetch will read
-        if cfg.fetch_strategy == "bucketed"
-        else spark.read.parquet(fixture["pages"]).select("url_hash", "url", "html")
-    )
-    pages_src.filter(
-        F.col("url_hash") % 101 == 0
-    ).select(job._extract_udf(F.col("html"), F.col("url")).alias("p")).select(
-        F.sum(F.length("p.text"))
-    ).first()
-    if os.environ.get("SPARK_GRAFT_BENCH_SEED_ALL") == "1":
-        # SEED_ALL's schedule stage scans the RAW pages url column (the
-        # seed dump); with the bucketed fetch the main warmup above reads
-        # only the bucketed layout, so warm the raw url column too — cold
-        # single-disk reads are not an engine property (see warmup note)
-        spark.read.parquet(fixture["pages"]).select("url").select(
-            F.count("url")
-        ).first()
-    if job._budgets is not None:
-        job._budgets.count()
-    t0 = time.time()
-    summary = job.run()
-    secs = time.time() - t0
-    _stop(spark)
-    processed = summary["total_candidates"] + summary["total_scheduled"]
-    # per-stage walls (schedule / fetch_extract / ...) live in the committed
-    # manifest, not the run summary — attach them so every recorded scaling
-    # pair directly evidences per-STAGE N→4N efficiency, not just per-wave
-    stage_t: dict[int, dict] = {}
-    try:
-        with open(os.path.join(ckpt, "manifest.json")) as f:
-            stage_t = {
-                int(k): v.get("timings", {})
-                for k, v in json.load(f).get("waves", {}).items()
-            }
-    except (OSError, ValueError):
-        pass
-    return {
-        "seconds": round(secs, 2),
-        "urls_scheduled": summary["total_scheduled"],
-        "urls_processed": processed,
-        "urls_per_sec": round(processed / secs, 1),
-        "waves": len(summary["waves"]),
-        "per_wave": [
-            {"wave": w["wave"], "scheduled": w["scheduled"],
-             "seconds": w["seconds"],
-             **({"timings": stage_t[w["wave"]]} if w["wave"] in stage_t else {})}
-            for w in summary["waves"]
-        ],
-    }
-
-
-def run_stage_scaling(fixture: dict, n_pages: int, n_lo: int = 4) -> dict:
-    """Per-level pinned subprocess wrapper around _run_stage_level_inproc."""
-    import subprocess
-
-    out = {}
-    n_hi = 4 * n_lo
-    for parts in (n_lo, n_hi):
-        cmd = [sys.executable, os.path.abspath(__file__),
-               "--pinned-stage", str(parts), str(n_pages)]
-        r = subprocess.run(cmd, capture_output=True, text=True,
-                           cwd=os.path.dirname(os.path.abspath(__file__)))
-        got = None
-        for line in reversed(r.stdout.splitlines()):
-            if line.startswith("BENCHJSON:"):
-                got = json.loads(line[len("BENCHJSON:"):])
-                break
-        if got is None:
-            raise RuntimeError(f"pinned stage run failed: {r.stderr[-2000:]}")
-        out[f"local[{parts}]"] = got
-    lo, hi = out[f"local[{n_lo}]"], out[f"local[{n_hi}]"]
-    out["efficiency"] = {k: round((lo[k] / hi[k]) / 4, 3) for k in lo}
-    return out
-
-
-def _run_stage_level_inproc(fixture: dict, parts: int) -> dict:
-    """Per-operator scaling on single large CPU-bound jobs — the regime of
-    10^10-URL waves, where per-wave fixed latency is negligible. Reported
-    alongside the full-loop numbers because in LOCAL mode the loop's fixed
-    costs (driver+executors share one JVM) do not shrink with parallelism,
-    which a real cluster's do not scale with either (the driver stays one
-    node regardless of executor count)."""
-    import time as _t
-
-    from pyspark.sql import functions as F
-
-    from bodhium_webscrapper_spark.functions.canonicalize import (
-        resolve_and_canonicalize_udf,
-    )
-    from bodhium_webscrapper_spark.functions.extract import extract_page_udf
-    from bodhium_webscrapper_spark.session import build_session
-
-    spark = build_session(f"local[{parts}]", "stage_scaling", parts)
-    pages = spark.read.parquet(fixture["pages"])
-    pages.limit(5000).select(extract_page_udf(F.col("html")).alias("p")).select(
-        F.count("p.text")
-    ).first()
-    # workloads sized so the scalable work dominates per-level fixed
-    # cost (job submit + arrow streaming setup ~1-2 s): at the 10^10
-    # target every stage is in this regime
-    links = spark.range(32_000_000).select(
-        F.concat(F.lit("/p"), (F.col("id") % 100000).cast("string")).alias("u"),
-        F.concat(F.lit("https://host"), (F.col("id") % 5000).cast("string"),
-                 F.lit(".example/")).alias("b"),
-    )
-    links.limit(5000).select(resolve_and_canonicalize_udf("u", "b")).count()
-    dd = spark.range(64_000_000).select(
-        (F.col("id") % 16_000_000).alias("k"), F.col("id").alias("v")
-    )
-    best = {"extract": 1e9, "canonicalize": 1e9, "dedup": 1e9}
-    for _ in range(2):
-        t0 = _t.time()
-        pages.filter(F.col("url_hash") % 16 == 0).select(
-            extract_page_udf(F.col("html")).alias("p")
-        ).select(F.sum(F.length("p.text"))).first()
-        best["extract"] = min(best["extract"], _t.time() - t0)
-        t0 = _t.time()
-        links.select(resolve_and_canonicalize_udf("u", "b").alias("c")).select(
-            F.count("c")
-        ).first()
-        best["canonicalize"] = min(best["canonicalize"], _t.time() - t0)
-        t0 = _t.time()
-        dd.groupBy("k").agg(F.min("v")).select(F.count("k")).first()
-        best["dedup"] = min(best["dedup"], _t.time() - t0)
-    result = {k: round(v, 2) for k, v in best.items()}
-    _stop(spark)
-    return result
-
-def run_compaction_bench(waves: int = 120, rows_per_wave: int = 5_000) -> dict:
-    """Long-crawl LSM compaction evidence, isolated at the store layer.
-
-    Simulates exactly what a 40-wave crawl does to the seen anti-join: each
-    wave appends a scheduled delta, and the next schedule stage reads
-    read_deltas(0..w) and anti-joins the frontier against it. Uncompacted,
-    that read unions one directory per wave (listing + plan width + file
-    count grow linearly); with compact_seen_every=8 it is bounded at one
-    base + <=8 tails. Reported: mean anti-join seconds over the first and
-    last 8 waves for both variants, plus result equality at the final wave.
-    (A real tiny-budget crawl can't produce this many waves — the fixture's
-    fanout-10 tree exhausts at depth ~log10(pages/host) — which is why this
-    is driven at the store. Deltas are deliberately SMALL: the LSM claim is
-    about per-directory costs — listing, plan width, file count — not row
-    volume, which grows identically under both variants.)
-    """
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from bodhium_webscrapper_spark.plans.checkpoint import SnapshotStore
-    from bodhium_webscrapper_spark.session import build_session
-
-    spark = build_session("local[8]", "bench_compaction", shuffle_partitions=8)
-    frontier = spark.range(waves * rows_per_wave, (waves + 2) * rows_per_wave).select(
-        F.xxhash64(F.concat(F.lit("f"), F.col("id"))).alias("url_hash")
-    )
-    frontier.count()  # warm
-    out = {"waves": waves, "rows_per_wave": rows_per_wave}
-    finals = {}
-    for tag, every in (("uncompacted", 0), ("compacted", 8)):
-        root = os.path.join(BENCH_DIR, f"store_compact_{tag}")
-        shutil.rmtree(root, ignore_errors=True)
-        store = SnapshotStore(root)
-        anti_sec = []
-        for w in range(waves):
-            delta = spark.range(w * rows_per_wave, (w + 1) * rows_per_wave).select(
-                F.xxhash64(F.concat(F.lit("s"), F.col("id"))).alias("url_hash"),
-                F.concat(F.lit("https://h/"), F.col("id")).alias("canonical_url"),
-            )
-            store.write(w, "scheduled", delta)
-            if every and (w + 1) % every == 0:
-                store.compact_deltas(spark, "scheduled", w)
-            t0 = time.time()
-            seen = store.read_deltas(spark, "scheduled", w).select("url_hash")
-            n = frontier.join(seen, "url_hash", "left_anti").count()
-            anti_sec.append(time.time() - t0)
-        finals[tag] = n
-        out[tag] = {
-            "anti_sec_first8": round(sum(anti_sec[:8]) / 8, 3),
-            "anti_sec_last8": round(sum(anti_sec[-8:]) / 8, 3),
-            "total_sec": round(sum(anti_sec), 2),
-        }
-    out["outputs_identical"] = finals["uncompacted"] == finals["compacted"]
-    _stop(spark)
-    return out
+# perfbench seed: picks one of its 16 input variants (seed mod 16)
+SEED = 1
+# (workload, --trace) pairs run by perfbench
+PERFBENCH = [("crawl_wide", 1), ("curation_suite", 0)]
+END_TO_END = ("setup_s", "run_s", "items_per_s")
 
 
 def run_queries(sf_dir: str, cpus: int) -> dict:
     import __spark_entry__ as entrymod
     from bodhium_webscrapper_spark.session import build_session
 
-    spark = build_session(f"local[{cpus}]", "bench_queries", shuffle_partitions=cpus)
+    spark = build_session(
+        f"local[{cpus}]", "bench_queries", shuffle_partitions=cpus,
+        extra_conf={"spark.ui.showConsoleProgress": "false"},
+    )
     qs = entrymod.queries()
     out = {}
     for name in HEADLINE:
         t0 = time.time()
-        n = qs[name](spark, sf_dir).count()
+        qs[name](spark, sf_dir).count()
         out[name] = round(time.time() - t0, 3)
-        _ = n
-    _stop(spark)
+    spark.stop()
     return out
 
 
-def best_clean_window_record() -> dict:
-    """Best RECORDED giant-pair scaling measurement from the window-hunt
-    log (BENCH/window_hunt.jsonl, committed; benchmarks/clean_window_run.py
-    appends it). This run's own window may be arbitrarily dirty — the
-    hypervisor parity probes prove it either way — so the headline artifact
-    always carries the best measurement whose bracketing probe was clean
-    (parity >= 0.93), alongside this window's raw numbers."""
-    path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH", "window_hunt.jsonl"
+def run_perfbench(workload: str, trace: int) -> dict:
+    """One perfbench run in a subprocess; returns its last stdout line, the
+    JSON object ``{correct, attempted, failed, metrics}``, or a failed
+    stand-in carrying the tail of its stderr."""
+    r = subprocess.run(
+        [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
+         "--seed", str(SEED), "--trace", str(trace)],
+        cwd=ROOT, capture_output=True, text=True,
     )
-    best = {}
-    best_sw = {}
-    best_pair = {}
-    best_pair_score = {}
-    best_q = {}
     try:
-        with open(path) as f:
-            for line in f:
-                try:
-                    rec = json.loads(line)
-                except ValueError:
-                    continue
-                # six-wave hunt records (benchmarks/sixwave_hunt.py): gated
-                # by a SAME-WINDOW control pair before AND after — clean iff
-                # the before-control was in-family and the after-control
-                # still >= 0.9 (the pair wasn't invaded mid-run)
-                sw = rec.get("sixwave")
-                if rec.get("kind") == "sixwave_hunt" and sw:
-                    c0 = (rec.get("control") or {}).get("eff", 0.0)
-                    c1 = (rec.get("control_after") or {}).get("eff", 0.0)
-                    # both controls two-sided: a super-linear reading on
-                    # EITHER side means a leg was invaded (inflated pair)
-                    if 0.93 <= c0 <= 1.08 and 0.9 <= c1 <= 1.08:
-                        if (
-                            not best_sw
-                            or sw["steady_state_eff"] > best_sw["steady_state_eff"]
-                        ):
-                            best_sw = {
-                                "ts": rec.get("ts"),
-                                "eff": sw["eff"],
-                                "steady_state_eff": sw["steady_state_eff"],
-                                "control_before": c0,
-                                "control_after": c1,
-                            }
-                    continue
-                # arbitrary-core-pair records (benchmarks/pair_scaling.py —
-                # the bus-saturation complement: same job, same 1:4 ratio,
-                # high level below the host's memory-bus saturation point).
-                # Two-sided controls before AND after the pair, gated
-                # against the control's OWN idle-host band at that pair:
-                # the dedup-shuffle control does not read ~1.0 at every
-                # pair — at 2→8 an IDLE host reads 0.617–0.841 across 7
-                # reps (BENCH/pair_calibration_2_8.log, 2026-08-18;
-                # pure-CPU 2-vs-8 parity 0.91–0.935 once truly idle — the
-                # host's own low-N frequency/steal behavior, no memory
-                # traffic involved).
-                # A reading inside the idle band means "window normal";
-                # outside it (either direction) means the window is
-                # anomalous. The run's two SECTIONS (six-wave, then giant)
-                # are separated by ~30 min and the round-5 runs caught the
-                # window flipping BETWEEN them (dirty six-wave + 0.957
-                # tight-rep giant in one run), so each section gates on
-                # its ADJACENT control — before-control for the six-wave
-                # phase, after-control for the giant phase — plus its own
-                # ABBA rep-consistency (spread ≤ 0.12). Rep consistency is
-                # the second side of each section's bracket: load can only
-                # inflate eff by slowing lo legs while hi legs run clean,
-                # which splits the interleaved per-rep efficiencies apart.
-                # Host-parity probes are recorded for context; they gate
-                # nothing unless taken at the PAIR's own core counts (the
-                # round-5 4v16 probes read 0.707 in the same minutes the
-                # 2→8 control read 0.703 in-band — thread-count regimes
-                # decouple, 16 threads hits frequency/saturation behavior
-                # 8 threads never sees).
-                if rec.get("kind") == "pair_scaling":
-                    c0 = (rec.get("control") or {}).get("eff", 0.0)
-                    c1 = (rec.get("control_after") or {}).get("eff", 0.0)
-                    band = {(4, 16): (0.93, 1.08), (2, 8): (0.58, 0.90)}.get(
-                        tuple(rec.get("pair", [])), (0.93, 1.08)
-                    )
-                    sw = rec.get("sixwave") or {}
-                    g = rec.get("giant") or {}
-
-                    def _sec_ok(sec, ctl):
-                        if not sec or not (band[0] <= ctl <= band[1]):
-                            return False
-                        # ABBA reps are REQUIRED: without ≥2 interleaved
-                        # reps a section has only a one-sided control
-                        reps = sec.get("rep_effs", [])
-                        return len(reps) >= 2 and max(reps) - min(reps) <= 0.12
-
-                    sw_ok, g_ok = _sec_ok(sw, c0), _sec_ok(g, c1)
-                    if not (sw_ok or g_ok):
-                        continue
-                    lo_n, hi_n = rec.get("pair", [0, 0])
-                    entry = {
-                        "ts": rec.get("ts"),
-                        "pair": rec.get("pair"),
-                        "control_before": c0,
-                        "control_after": c1,
-                        "host_parity": [
-                            (rec.get("host_before") or {}).get("parity"),
-                            (rec.get("host_after") or {}).get("parity"),
-                        ],
-                    }
-                    if sw_ok:
-                        entry["sixwave_eff"] = sw["eff"]
-                        entry["sixwave_steady_state_eff"] = sw[
-                            "steady_state_eff"
-                        ]
-                        entry["sixwave_hi_urls_per_sec"] = sw[
-                            f"local[{hi_n}]"
-                        ]["urls_per_sec"]
-                        if sw.get("rep_effs"):
-                            entry["sixwave_rep_effs"] = sw["rep_effs"]
-                    if g_ok:
-                        entry["giant_eff"] = g["eff"]
-                        entry["giant_hi_urls_per_sec"] = g[f"local[{hi_n}]"][
-                            "urls_per_sec"
-                        ]
-                        if g.get("rep_effs"):
-                            entry["giant_rep_effs"] = g["rep_effs"]
-                    # best per SECTION across records — the window can be
-                    # clean for one section of one record and the other
-                    # section of another
-                    for sec_key, ok in (("sixwave", sw_ok), ("giant", g_ok)):
-                        if not ok:
-                            continue
-                        score = entry.get(
-                            "giant_eff" if sec_key == "giant"
-                            else "sixwave_steady_state_eff", 0.0)
-                        if score > best_pair_score.get(sec_key, 0.0):
-                            best_pair_score[sec_key] = score
-                            best_pair[sec_key] = {
-                                k: v for k, v in entry.items()
-                                if not k.startswith(
-                                    "giant" if sec_key == "sixwave"
-                                    else "sixwave")
-                            }
-                    continue
-                # curation-operator ABBA records
-                # (benchmarks/quality_scaling_run.py): gated by the
-                # bracketing pure-CPU host-parity probes at the pair's own
-                # core counts (the runner's artifact gate, >=0.90) plus
-                # per-op ABBA rep consistency; dedup-shuffle control rows
-                # ride along as the shuffle-ceiling comparison.
-                if rec.get("kind") == "quality_scaling":
-                    probes = [rec.get("probe_before") or {},
-                              rec.get("probe_after") or {}]
-                    if min(p.get("parity", 0.0) for p in probes) < 0.90:
-                        continue
-                    for op, v in (rec.get("ops") or {}).items():
-                        reps = v.get("rep_effs", [])
-                        if len(reps) >= 2 and max(reps) - min(reps) > 0.12:
-                            continue
-                        cur = best_q.get(op)
-                        if not cur or v["eff"] > cur["eff"]:
-                            best_q[op] = {
-                                "ts": rec.get("ts"),
-                                "pair": rec.get("pair"),
-                                "eff": v["eff"],
-                                "rep_effs": reps,
-                                "amplify": v.get("amplify", rec.get("amplify")),
-                                "control_effs": [
-                                    (rec.get("control_before") or {}).get("eff"),
-                                    (rec.get("control_after") or {}).get("eff"),
-                                ],
-                            }
-                    continue
-                giant = rec.get("giant")
-                if not giant:
-                    continue
-                probes = [rec.get("host_before") or {}, rec.get("host_after") or {}]
-                clean = max(p.get("parity", 0.0) for p in probes)
-                if clean < 0.93:
-                    continue
-                # ABBA rep consistency, same rule as the pair_scaling
-                # branch: a window that collapses mid-pair splits the
-                # interleaved rep efficiencies apart (e.g. the
-                # 2026-08-19T21:20 record: reps 0.93/0.467 with the
-                # after-parity at 0.722 — a one-sided-parity record whose
-                # clean rep rode a bus-disturbed local[4] leg). Records
-                # predating rep capture pass on their probes alone.
-                reps = giant.get("rep_effs") or []
-                if len(reps) >= 2 and max(reps) - min(reps) > 0.12:
-                    continue
-                if not best or giant["eff"] > best["giant_eff"]:
-                    best = {
-                        "ts": rec.get("ts"),
-                        "giant_eff": giant["eff"],
-                        "local[4]_sec": giant["local[4]"]["seconds"],
-                        "local[16]_sec": giant["local[16]"]["seconds"],
-                        "local[16]_urls_per_sec": giant["local[16]"]["urls_per_sec"],
-                        "clean_probe_parity": clean,
-                        "sixwave_eff": (rec.get("sixwave") or {}).get("eff"),
-                        "sixwave_steady_state_eff": (rec.get("sixwave") or {}).get(
-                            "steady_state_eff"
-                        ),
-                    }
-    except OSError:
-        pass
-    if best_sw:
-        best["sixwave_hunt_best"] = best_sw
-    if best_pair:
-        best["pair_scaling_best"] = best_pair
-    if best_q:
-        best["curation_ops_best"] = best_q
-    return best
+        return json.loads(r.stdout.strip().splitlines()[-1])
+    except (IndexError, ValueError):
+        return {"correct": False, "failed": None, "metrics": {},
+                "error": r.stderr.strip()[-300:].replace("\r", "\n")}
 
 
-def main():
+def _figures(out: dict) -> tuple[dict, dict]:
+    """(end-to-end entry, per-layer figures) of one perfbench result."""
+    m = {k: v["value"] for k, v in out.get("metrics", {}).items()}
+    if "trace.cold_run_s" in m:  # traced crawl: derive the timed run's figures
+        run_s = m["trace.cold_run_s"]
+        m.update(
+            setup_s=m["session.start_s"] + m["frontier.init_s"],
+            run_s=run_s,
+            items_per_s=m["funnel.candidates"] / run_s if run_s else 0.0,
+        )
+    entry = {"correct": out.get("correct", False), "failed": out.get("failed")}
+    entry.update({k: round(m.pop(k), 4) for k in END_TO_END if k in m})
+    if "error" in out:
+        entry["error"] = out["error"]
+    return entry, {k: round(v, 4) for k, v in m.items() if v and not k.startswith("query.")}
+
+
+def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    n_pages = int(os.environ.get("SPARK_GRAFT_BENCH_PAGES", "16000000"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1"
 
-    t_total = time.time()
-    result = {"metric": "frontier_throughput_and_query_wall", "unit": "sec", "sf": sf}
-
     queries = run_queries(sf_dir, cpus)
-
-    frontier = {}
-    host = {}
-    if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        fixture = _fixture(n_pages)
-        host["before"] = host_probe()
-        host["membw"] = membw_probe()
-        # each run is pinned (sched_setaffinity) to exactly N cores — see
-        # run_frontier. Best-of-reps per level rejects noisy-neighbor
-        # outliers (observed 2-8x wall-clock spikes at idle CPU).
-        reps = int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "2"))
-        n_lo = int(os.environ.get("SPARK_GRAFT_BENCH_N", "4"))
-        n_hi = 4 * n_lo
-        lo_runs = [run_frontier(f"local[{n_lo}]", fixture, f"p{n_lo}_{i}", n_pages)
-                   for i in range(reps)]
-        hi_runs = [run_frontier(f"local[{n_hi}]", fixture, f"p{n_hi}_{i}", n_pages)
-                   for i in range(reps)]
-        lo = min(lo_runs, key=lambda r: r["seconds"])
-        hi = min(hi_runs, key=lambda r: r["seconds"])
-        eff = (lo["seconds"] / hi["seconds"]) / (n_hi / n_lo)
-        # efficiency-vs-wave-size curve: wave sizes grow through the run, so
-        # per-wave efficiency (best-of-reps per wave per level) shows how the
-        # loop converges toward the large-wave regime of the 10^10 target
-        curve = []
-        for k in range(min(len(r["per_wave"]) for r in lo_runs + hi_runs)):
-            slo = min(r["per_wave"][k]["seconds"] for r in lo_runs)
-            shi = min(r["per_wave"][k]["seconds"] for r in hi_runs)
-            curve.append(
-                {
-                    "wave": k,
-                    "scheduled": lo["per_wave"][k]["scheduled"],
-                    "sec_lo": slo,
-                    "sec_hi": shi,
-                    "eff": round((slo / shi) / (n_hi / n_lo), 3),
-                }
-            )
-        # steady-state = the loop excluding wave 0 (seed canonicalization +
-        # the run's first full pages scan — one-off costs, not per-wave)
-        ss_lo = sum(w["sec_lo"] for w in curve[1:])
-        ss_hi = sum(w["sec_hi"] for w in curve[1:])
-        frontier = {
-            "n_pages": n_pages,
-            f"local[{n_lo}]": lo,
-            f"local[{n_hi}]": hi,
-            "scaling_efficiency": round(eff, 3),
-            "steady_state_efficiency": (
-                round((ss_lo / ss_hi) / (n_hi / n_lo), 3) if curve[1:] and ss_hi else None
-            ),
-            "per_wave_efficiency": curve,
-        }
-
-        # GIANT-WAVE configuration — the direct 10^10-regime measurement:
-        # an effectively uncapped per-host budget turns the run into 2-3
-        # waves of up to ~10^7 scheduled URLs each, where per-wave work is
-        # minutes and the ~seconds of parallelism-independent driver/AQE
-        # latency (the small-wave efficiency ceiling) is amortized away —
-        # the same reason a 1000-executor cluster at 10^8-row waves scales
-        # at the per-stage ceiling rather than the sandbox's small-wave
-        # number. Same fixture, same pinning, same best-of-reps discipline;
-        # bit-identical outputs across levels are implied by the identical
-        # scheduled counts per wave (asserted below).
-        if os.environ.get("SPARK_GRAFT_SKIP_GIANT") != "1":
-            genv = {
-                "SPARK_GRAFT_BENCH_BUDGET": os.environ.get(
-                    "SPARK_GRAFT_GIANT_BUDGET", "100000"
-                ),
-                "SPARK_GRAFT_BENCH_WAVES": os.environ.get(
-                    "SPARK_GRAFT_GIANT_WAVES", "1"
-                ),
-                "SPARK_GRAFT_BENCH_SEED_ALL": "1",
-                "SPARK_GRAFT_BENCH_FETCH": _giant_fetch(),
-            }
-            g_reps = int(os.environ.get("SPARK_GRAFT_GIANT_REPS", "2"))
-            glo_runs = [
-                run_frontier(f"local[{n_lo}]", fixture, f"g{n_lo}_{i}", n_pages, genv)
-                for i in range(g_reps)
-            ]
-            ghi_runs = [
-                run_frontier(f"local[{n_hi}]", fixture, f"g{n_hi}_{i}", n_pages, genv)
-                for i in range(g_reps)
-            ]
-            glo = min(glo_runs, key=lambda r: r["seconds"])
-            ghi = min(ghi_runs, key=lambda r: r["seconds"])
-            assert [w["scheduled"] for w in glo["per_wave"]] == [
-                w["scheduled"] for w in ghi["per_wave"]
-            ], "giant-wave runs diverged between parallelism levels"
-            gcurve = []
-            for k in range(min(len(r["per_wave"]) for r in glo_runs + ghi_runs)):
-                slo = min(r["per_wave"][k]["seconds"] for r in glo_runs)
-                shi = min(r["per_wave"][k]["seconds"] for r in ghi_runs)
-                gcurve.append(
-                    {
-                        "wave": k,
-                        "scheduled": glo["per_wave"][k]["scheduled"],
-                        "sec_lo": slo,
-                        "sec_hi": shi,
-                        "eff": round((slo / shi) / (n_hi / n_lo), 3),
-                    }
-                )
-            biggest = max(gcurve, key=lambda w: w["scheduled"])
-            frontier["giant_wave"] = {
-                "budget": int(genv["SPARK_GRAFT_BENCH_BUDGET"]),
-                "fetch": genv["SPARK_GRAFT_BENCH_FETCH"],
-                f"local[{n_lo}]": glo,
-                f"local[{n_hi}]": ghi,
-                "full_loop_efficiency": round(
-                    (glo["seconds"] / ghi["seconds"]) / (n_hi / n_lo), 3
-                ),
-                "per_wave_efficiency": gcurve,
-            }
-            frontier["biggest_wave_efficiency"] = {
-                "scheduled": biggest["scheduled"],
-                "eff": biggest["eff"],
-            }
-        host["after"] = host_probe()
-        # the host parity (pure-CPU per-core ceiling, see host_probe) in
-        # the SAME window, averaged across the run's bracketing probes:
-        # raw efficiencies above are the recorded facts; this quotient is
-        # what the engine delivers of the ceiling the hypervisor left.
-        parity = (host["before"]["parity"] + host["after"]["parity"]) / 2
-        host["parity_mean"] = round(parity, 3)
-        if "giant_wave" in frontier and parity > 0:
-            frontier["giant_wave"]["host_normalized_efficiency"] = round(
-                frontier["giant_wave"]["full_loop_efficiency"] / min(1.0, parity), 3
-            )
-
-    stage_scaling = {}
-    compaction = {}
-    if os.environ.get("SPARK_GRAFT_SKIP_SCALING") != "1":
-        stage_scaling = run_stage_scaling(fixture, n_pages)
-        compaction = run_compaction_bench()
-
-    result["value"] = round(time.time() - t_total, 2)
-    result["queries"] = queries
-    result["host"] = host
-    result["frontier"] = frontier
-    result["stage_scaling"] = stage_scaling
-    result["compaction"] = compaction
-    result["recorded_clean_window"] = best_clean_window_record()
-
-    # FULL results go to a file; stdout gets ONE compact line. The round-3
-    # artifact lost its per-query walls because the full line (16M-page
-    # fixture + per-wave curves + compaction) outgrew the driver's stdout
-    # tail capture ("parsed": null) — the file keeps every detail, the
-    # printed line keeps every headline number and always parses.
-    # smoke runs (scaling skipped) must not clobber the committed full
-    # artifact — they write a sibling the repo ignores
-    smoke = os.environ.get("SPARK_GRAFT_SKIP_SCALING") == "1"
-    full_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH",
-        "r_smoke.json" if smoke else "r_full.json",
-    )
-    os.makedirs(os.path.dirname(full_path), exist_ok=True)
-    with open(full_path, "w") as f:
-        json.dump(result, f, indent=1)
-
-    compact = {
-        "metric": result["metric"],
-        "value": result["value"],
+    perfbench: dict = {"seed": SEED}
+    layers: dict = {}
+    for workload, trace in PERFBENCH:
+        perfbench[workload], got = _figures(run_perfbench(workload, trace))
+        layers.update(got)
+    print(json.dumps({
+        "metric": "headline_query_wall",
+        "value": round(sum(queries.values()), 3),
         "unit": "sec",
         "sf": sf,
         "queries": queries,
-        "full": "BENCH/r_smoke.json" if smoke else "BENCH/r_full.json",
-    }
-    if host:
-        compact["host"] = host
-    if frontier:
-        n_lo = int(os.environ.get("SPARK_GRAFT_BENCH_N", "4"))
-        lo_k, hi_k = f"local[{n_lo}]", f"local[{4 * n_lo}]"
-        compact["frontier"] = {
-            "n_pages": frontier["n_pages"],
-            lo_k: {k: frontier[lo_k][k] for k in ("seconds", "urls_per_sec", "waves")},
-            hi_k: {k: frontier[hi_k][k] for k in ("seconds", "urls_per_sec", "waves")},
-            "scaling_efficiency": frontier["scaling_efficiency"],
-            "steady_state_efficiency": frontier["steady_state_efficiency"],
-        }
-        if "giant_wave" in frontier:
-            g = frontier["giant_wave"]
-            compact["frontier"]["giant_wave"] = {
-                "budget": g["budget"],
-                "fetch": g.get("fetch"),
-                lo_k: {k: g[lo_k][k] for k in ("seconds", "urls_per_sec", "waves")},
-                hi_k: {k: g[hi_k][k] for k in ("seconds", "urls_per_sec", "waves")},
-                "full_loop_efficiency": g["full_loop_efficiency"],
-                "host_normalized_efficiency": g.get("host_normalized_efficiency"),
-                "per_wave_efficiency": g["per_wave_efficiency"],
-            }
-        if "biggest_wave_efficiency" in frontier:
-            compact["frontier"]["biggest_wave_efficiency"] = frontier[
-                "biggest_wave_efficiency"
-            ]
-    if stage_scaling:
-        compact["stage_efficiency"] = stage_scaling.get("efficiency")
-    if compaction:
-        compact["compaction_identical"] = compaction.get("outputs_identical")
-    if result["recorded_clean_window"]:
-        compact["recorded_clean_window"] = result["recorded_clean_window"]
-    print(json.dumps(compact))
-
-
-def _pinned_stage_main():
-    parts, n_pages = int(sys.argv[2]), int(sys.argv[3])
-    _pin_to(parts)
-    fixture = _fixture(n_pages)
-    print("BENCHJSON:" + json.dumps(_run_stage_level_inproc(fixture, parts)))
-
-
-def _pinned_frontier_main():
-    master, tag, n_pages = sys.argv[2], sys.argv[3], int(sys.argv[4])
-    _pin_to(int(master[len("local["):-1]))
-    fixture = _fixture(n_pages)  # cached by the parent; instant here
-    print("BENCHJSON:" + json.dumps(_run_frontier_inproc(master, fixture, tag)))
+        "perfbench": perfbench,
+        "layers": layers,
+    }), flush=True)
 
 
 if __name__ == "__main__":
-    if len(sys.argv) > 1 and sys.argv[1] == "--pinned-frontier":
-        _pinned_frontier_main()
-    elif len(sys.argv) > 1 and sys.argv[1] == "--pinned-stage":
-        _pinned_stage_main()
-    else:
-        main()
+    main()

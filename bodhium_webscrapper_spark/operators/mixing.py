@@ -314,13 +314,9 @@ def dsir_select(
 
     Small k compiles to TakeOrderedAndProject (per-partition top-k,
     driver merges partitions x k rows) via politeness.global_ordered_cap.
-    Note the cap's distributed-threshold path (k > 10^6) assumes a BOUNDED
-    priority-level table; ppm scores are high-cardinality, so it would
-    fall back to TakeOrdered there. For a 10^7-scale k over 10^10 docs,
-    prefilter first — keep score >= an approx-quantile cutoff slightly
-    below the k-th (one pass, approx_percentile), then exact top-k among
-    the survivors; the cutoff only has to shed the corpus bulk, exactness
-    comes from the final ordered take."""
+    Above 10^6 the cap's distributed-threshold path takes over; ppm scores
+    are high-cardinality, so it first narrows them with score histograms
+    (one min/max and one histogram agg per round) before its level walk."""
     from bodhium_webscrapper_spark.operators.politeness import (
         global_ordered_cap,
     )

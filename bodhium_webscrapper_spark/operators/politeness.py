@@ -124,6 +124,12 @@ def per_host_budget(
     return out
 
 
+# global_ordered_cap: a level table with more distinct priorities than
+# _MAX_LEVELS is first narrowed with histograms of at most _BINS bins
+_MAX_LEVELS = 100_000
+_BINS = 4096
+
+
 def global_ordered_cap(
     df: DataFrame,
     k: int,
@@ -132,7 +138,8 @@ def global_ordered_cap(
     key_col: str = "url_hash",
 ) -> DataFrame:
     """W2: keep the global top-``k`` rows under the crawl order
-    (priority DESC, url_hash ASC) — the wave's ``global_wave_limit``.
+    (priority DESC NULLS LAST, url_hash ASC) — the wave's
+    ``global_wave_limit``.
 
     Small ``k`` (≤ ``takeordered_threshold``): ``orderBy().limit(k)``, which
     Spark compiles to TakeOrderedAndProject — per-partition top-k map-side,
@@ -142,6 +149,13 @@ def global_ordered_cap(
     computed as a THRESHOLD instead and applied as a pure distributed filter
     — no global sort, no single-partition stage, exact and deterministic:
 
+      0. while the rows still in play hold more than 100k distinct
+         priorities (not a decay-structured frontier): a histogram of
+         ``priority`` over at most 4096 order-preserving bins, NULLs last
+         (one hash agg, after a min/max agg) → boundary bin and the rows
+         still needed from it; higher bins are kept, lower ones dropped.
+         The bin's lowest and highest priorities land in different bins of
+         the next histogram, so every round narrows the range;
       1. per-priority-level counts (one hash agg; priorities are decay
          powers, so the level table is tiny) → boundary level p* and the
          number r of rows still needed from it;
@@ -154,50 +168,53 @@ def global_ordered_cap(
 
     Exactness relies on ``key_col`` being unique per row — true post-dedup
     in the wave loop (A1 guarantees one row per url_hash); with duplicate
-    keys the boundary tie would overshoot by the tie count. Adds 2-3 small
-    driver actions — only on waves big enough to carry a >10^6 cap, where
-    they are noise against the wave's work. Deterministic: a pure function
-    of the data (same set orderBy().limit(k) selects; artifact row order is
-    irrelevant — the crawl-order contract is the sort key itself, W2).
-    Falls back to TakeOrdered if the level table is degenerate (>100k
-    distinct priorities — not a decay-structured frontier)."""
+    keys the boundary tie would overshoot by the tie count — and, in step
+    0, on finite priorities (bins are computed on their double value).
+    Adds 2-3 small driver actions (3 more per step-0 round) — only on waves
+    big enough to carry a >10^6 cap, where they are noise against the
+    wave's work. Deterministic: a pure function of the data (same set
+    orderBy().limit(k) selects; artifact row order is irrelevant — the
+    crawl-order contract is the sort key itself, W2)."""
+    p, key = F.col(priority_col), F.col(key_col)
     if k <= takeordered_threshold:
-        return df.orderBy(
-            F.col(priority_col).desc(), F.col(key_col).asc()
-        ).limit(k)
-    levels = df.groupBy(priority_col).agg(F.count(F.lit(1)).alias("_n")).collect()
-    if len(levels) > 100_000:
-        return df.orderBy(
-            F.col(priority_col).desc(), F.col(key_col).asc()
-        ).limit(k)
-    # priority DESC with NULLs last (matches desc_nulls_last default)
-    levels.sort(key=lambda r: (r[priority_col] is None, -(r[priority_col] or 0.0)))
-    total = sum(r["_n"] for r in levels)
-    if total <= k:
-        return df
+        return df.orderBy(p.desc(), key.asc()).limit(k)
+    # rows kept outright, the rows still in play, and how many of those
+    # the cap still takes
+    kept, scope, r = F.lit(False), F.lit(True), k
+    while True:
+        in_play = df.filter(scope)
+        levels = (
+            in_play.groupBy(priority_col)
+            .agg(F.count(F.lit(1)).alias("_n"))
+            .limit(_MAX_LEVELS + 1)
+            .collect()
+        )
+        if len(levels) <= _MAX_LEVELS:
+            break
+        narrowed = _boundary_priority_bin(in_play, p, r)
+        if narrowed is None:  # fewer than r rows in play
+            return df.filter(kept | scope)
+        above, at, before = narrowed
+        kept, scope, r = kept | (scope & above), scope & at, r - before
+    levels.sort(key=lambda row: (row[priority_col] is None, -(row[priority_col] or 0.0)))
+    total = sum(row["_n"] for row in levels)
+    if total <= r:
+        return df.filter(kept | scope)
     cum = 0
     for row in levels:
-        if cum + row["_n"] >= k:
-            p_star, r = row[priority_col], k - cum
+        if cum + row["_n"] >= r:
+            p_star, r = row[priority_col], r - cum
             break
         cum += row["_n"]
-    at_level = (
-        F.col(priority_col).isNull()
-        if p_star is None
-        else (F.col(priority_col) == p_star)
-    )
-    above_level = (
-        F.col(priority_col).isNotNull()
-        if p_star is None
-        else (F.col(priority_col) > p_star)
-    )
+    at_level = scope & (p.isNull() if p_star is None else p == p_star)
+    above_level = kept | (scope & (p.isNotNull() if p_star is None else p > p_star))
     if r == 0:
         return df.filter(above_level)
     level_df = df.filter(at_level)
     if r >= total - cum:  # whole boundary level fits
         return df.filter(above_level | at_level)
     bins = (
-        level_df.groupBy(F.shiftright(F.col(key_col), 52).alias("_bin"))
+        level_df.groupBy(F.shiftright(key, 52).alias("_bin"))
         .agg(F.count(F.lit(1)).alias("_n"))
         .collect()
     )
@@ -209,13 +226,41 @@ def global_ordered_cap(
             break
         bcum += b["_n"]
     h_star = (
-        level_df.filter(F.shiftright(F.col(key_col), 52) == b_star)
-        .orderBy(F.col(key_col).asc())
+        level_df.filter(F.shiftright(key, 52) == b_star)
+        .orderBy(key.asc())
         .limit(r2)
         .agg(F.max(key_col).alias("_h"))
         .first()["_h"]
     )
-    return df.filter(above_level | (at_level & (F.col(key_col) <= h_star)))
+    return df.filter(above_level | (at_level & (key <= h_star)))
+
+
+def _boundary_priority_bin(df: DataFrame, p, r: int):
+    """Step 0 of ``global_ordered_cap``: bin ``df``'s priorities into at
+    most ``_BINS`` ranges (a monotone map of the priority, NULLs a bin of
+    their own, last) and find the bin holding the ``r``-th row in crawl
+    order. Returns (rows above that bin, rows in it, row count above it)
+    as Column conditions and an int, or None when ``df`` has fewer than
+    ``r`` rows."""
+    p_dbl = p.cast("double")
+    lo, hi = df.agg(F.min(p_dbl), F.max(p_dbl)).first()
+    # monotone in p (IEEE ops are), so every bin is a priority range; lo
+    # lands in bin 0 and hi in bin _BINS - 1
+    b = F.floor((p_dbl - F.lit(lo)) / F.lit(hi - lo) * (_BINS - 1))
+    bins = (
+        df.groupBy(b.alias("_bin"))
+        .agg(F.count(F.lit(1)).alias("_n"), F.min(p).alias("_lo"), F.max(p).alias("_hi"))
+        .collect()
+    )
+    bins.sort(key=lambda x: (x["_bin"] is None, -(x["_bin"] or 0)))
+    cum = 0
+    for x in bins:
+        if cum + x["_n"] >= r:
+            if x["_bin"] is None:
+                return p.isNotNull(), p.isNull(), cum
+            return p > x["_hi"], p.between(x["_lo"], x["_hi"]), cum
+        cum += x["_n"]
+    return None
 
 
 def host_budget_map(

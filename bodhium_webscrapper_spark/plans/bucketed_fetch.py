@@ -2,8 +2,8 @@
 
 The wave loop's default fetch broadcasts the politeness-capped wave into a
 hash probe of pages (plans/frontier.py). The broadcast build is
-driver-serial — measured ~0.7 s per million keys on this sandbox
-(benchmarks/probe_fetch_serial.py) — which is fine for 10^5-10^7-row waves
+driver-serial — measured ~0.7 s per million keys (a probe script of
+commit 0e901c5, deleted since) — which is fine for 10^5-10^7-row waves
 but becomes the bottleneck for 10^8-row waves, where no broadcast of any
 kind is viable. The production answer (and the plain-parquet analogue of
 Iceberg's ``bucket(N, url_hash)`` storage-partitioned join) is BUCKETED

@@ -146,8 +146,8 @@ class CrawlConfig:
     # hundreds of waves the per-wave anti-join otherwise unions hundreds of
     # small-file directories. Amortized O(seen)/K rewrite per wave.
     # Default ON (16): a default-config long crawl must not regress into
-    # one-directory-per-wave unions; bench shows flat anti-join time vs the
-    # uncompacted twin's growth (BENCH/BASELINE.md §compaction).
+    # one-directory-per-wave unions; measured flat anti-join time vs the
+    # uncompacted twin's growth (BENCH/BASELINE.md §3).
     compact_seen_every: int = 16
     # robots rules broadcast cutover: above this many flattened rules rows
     # the gate joins by shuffle instead of broadcast (a 10^8-host rules
@@ -215,8 +215,8 @@ class CrawlConfig:
     #    set is written bucketBy the same spec, so the fetch join plans
     #    with no broadcast, no exchange, and no sort — the 10^8-row-wave
     #    path, where the broadcast build's driver-serial ~0.7 s/M keys
-    #    (benchmarks/probe_fetch_serial.py) is the loop's residual
-    #    fixed cost. Requires a store with a ``write_bucketed`` seam.
+    #    (measured by a probe script of commit 0e901c5, deleted since) is
+    #    the loop's residual fixed cost. Requires a store with a ``write_bucketed`` seam.
     fetch_strategy: str = "broadcast"
     fetch_buckets: int = 64
     # link-authority prioritization: every N committed waves, recompute
@@ -264,8 +264,8 @@ def dedup_first_wins_frontier(frontier: DataFrame) -> DataFrame:
     """A1: one row per url_hash — keep highest priority, then lowest depth
     (deterministic; discovery order is encoded in (depth, priority)).
 
-    Physical form, MEASURED not guessed (benchmarks/bench_dedup_forms.py, 48M
-    rows / 16M keys, local[16]): the row_number window (one exchange + one
+    Physical form, MEASURED not guessed (a probe script of commit 0e901c5,
+    deleted since; 48M rows / 16M keys, local[16]): the row_number window (one exchange + one
     post-shuffle sort) runs ~2x faster than the tempting
     ``groupBy(url_hash).agg(max_by(struct(...), struct(...)))`` rewrite —
     max_by over a struct buffer is not hash-aggregable, so the aggregate
@@ -291,7 +291,8 @@ def dedup_first_wins_frontier(frontier: DataFrame) -> DataFrame:
     ≈ hash-cost, benchmarks round 5) while the dropped column is ~12% of
     the window exchange's bytes — and this exchange is the schedule
     stage's memory-bandwidth hot spot (its task time inflates ~1.66x at
-    16 threads on one socket, tracking the membw_probe parity)."""
+    16 threads on one socket, tracking the host's memory-bandwidth parity;
+    BENCH/BASELINE.md §2.2b)."""
     from bodhium_webscrapper_spark.functions.canonicalize import host_of
 
     cols = frontier.columns

@@ -9,6 +9,20 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+# the most driver heap a session asks for by default
+_MAX_DRIVER_MEMORY_MB = 48 * 1024
+
+
+def default_driver_memory() -> str:
+    """Half the host's physical memory (``MemTotal``), at most 48g; 48g
+    where /proc/meminfo cannot be read."""
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return f"{_MAX_DRIVER_MEMORY_MB}m"
+    return f"{min(_MAX_DRIVER_MEMORY_MB, kb // 2048)}m"
+
 
 def build_session(
     master: str = "local[*]",
@@ -41,7 +55,7 @@ def build_session(
         # rounds, scaling efficiency capped at ~0.6; 32m splits → 0.90)
         .config("spark.sql.files.maxPartitionBytes", "32m")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "48g")
+        .config("spark.driver.memory", default_driver_memory())
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

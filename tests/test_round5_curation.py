@@ -283,16 +283,3 @@ def test_dsir_score_plan_shape(spark):
     )
     assert "BroadcastHashJoin" in plan
     assert "EvalPython" not in plan
-
-
-def test_clean_window_gate_rejects_split_rep_records():
-    """Regression for the kindless-giant gate: a record whose ABBA reps
-    split apart (window collapsed mid-pair) must not displace a two-sided
-    tight-rep capture, even with one clean-side parity probe. The
-    committed log contains exactly such a record (2026-08-19T21:20:30,
-    reps 0.93/0.467, before-parity 0.983) and the tight 0.843 capture."""
-    import bench
-
-    best = bench.best_clean_window_record()
-    assert best.get("ts") == "2026-08-19T04:17:31"
-    assert best.get("giant_eff") == 0.843

@@ -122,11 +122,33 @@ def _cap_fixture(spark, n=2000):
     )
 
 
-@pytest.mark.parametrize("k", [1, 137, 500, 1999, 2000, 5000])
-def test_global_cap_threshold_form_exact(spark, k):
+def _wide_cap_fixture(spark, n=120_000):
+    """More than 100k distinct priorities: 2400 NULLs, a tied outlier level
+    (2400 rows at 1e9) that puts every other row in the first histogram's
+    bin 0 (so a boundary there is narrowed twice), and 10k priorities
+    shared by two rows each."""
+    p = (
+        F.when(F.col("id") % 50 == 0, F.lit(None).cast("double"))
+        .when(F.col("id") % 50 == 1, F.lit(1e9))
+        .otherwise((F.col("id") % 110_000).cast("double") * 1e-6)
+    )
+    return spark.range(n).select(
+        F.xxhash64(F.col("id").cast("string")).alias("url_hash"), p.alias("priority")
+    )
+
+
+@pytest.mark.parametrize(
+    "fixture,k",
+    [pytest.param(_cap_fixture, k, id=str(k)) for k in (1, 137, 500, 1999, 2000, 5000)]
+    + [
+        pytest.param(_wide_cap_fixture, k, id=f"wide-{k}")
+        for k in (1, 2400, 60_000, 117_601, 119_000, 130_000)
+    ],
+)
+def test_global_cap_threshold_form_exact(spark, fixture, k):
     from bodhium_webscrapper_spark.operators.politeness import global_ordered_cap
 
-    df = _cap_fixture(spark)
+    df = fixture(spark)
     want = {
         r["url_hash"]
         for r in df.orderBy(F.col("priority").desc(), F.col("url_hash").asc())
@@ -146,19 +168,19 @@ def test_global_cap_no_single_partition_merge_above_threshold(spark):
 
     from bodhium_webscrapper_spark.operators.politeness import global_ordered_cap
 
-    df = _cap_fixture(spark)
-    capped = global_ordered_cap(df, 500, takeordered_threshold=0)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        capped.explain("formatted")
-    plan = buf.getvalue()
-    assert "TakeOrderedAndProject" not in plan
-    assert "GlobalLimit" not in plan
-    # and the small-k path still IS TakeOrdered
-    buf2 = io.StringIO()
-    with redirect_stdout(buf2):
-        global_ordered_cap(df, 500, takeordered_threshold=1000).explain("formatted")
-    assert "TakeOrderedAndProject" in buf2.getvalue()
+    for df in (_cap_fixture(spark), _wide_cap_fixture(spark)):
+        capped = global_ordered_cap(df, 500, takeordered_threshold=0)
+        buf = io.StringIO()
+        with redirect_stdout(buf):
+            capped.explain("formatted")
+        plan = buf.getvalue()
+        assert "TakeOrderedAndProject" not in plan
+        assert "GlobalLimit" not in plan
+        # and the small-k path still IS TakeOrdered
+        buf2 = io.StringIO()
+        with redirect_stdout(buf2):
+            global_ordered_cap(df, 500, takeordered_threshold=1000).explain("formatted")
+        assert "TakeOrderedAndProject" in buf2.getvalue()
 
 
 # ------------------------------------------------------------- IVF sampling
@@ -368,46 +390,6 @@ def test_count_split_aggregates_on_host_hash(spark):
     # string-keyed semi/anti joins let NULLs bypass the budget entirely)
     assert out.count() == 7 * 5 + 5
     assert out.filter(F.col("host").isNull()).count() == 5
-
-
-# ------------------------------------- clean-window record surfacing (r5)
-def test_best_clean_window_record_filters_dirty_probes(tmp_path, monkeypatch):
-    """bench.best_clean_window_record must ignore giant pairs whose
-    bracketing host probes were BOTH dirty (<0.93 parity) and pick the
-    highest clean-probe efficiency, so a dirty per-round bench window can
-    never erase the recorded clean measurement from the artifact."""
-    import json as _json
-
-    import bench as _bench
-
-    recs = [
-        {"ts": "t0", "host_before": {"parity": 0.7}, "host_after": {"parity": 0.71},
-         "giant": {"eff": 0.99, "local[4]": {"seconds": 1, "urls_per_sec": 1},
-                   "local[16]": {"seconds": 1, "urls_per_sec": 1}}},
-        {"ts": "t1", "host_before": {"parity": 0.7}, "host_after": {"parity": 0.95},
-         "sixwave": {"eff": 0.6, "steady_state_eff": 0.7},
-         "giant": {"eff": 0.81, "local[4]": {"seconds": 240.0, "urls_per_sec": 9e4},
-                   "local[16]": {"seconds": 74.0, "urls_per_sec": 3e5}}},
-        {"ts": "t2", "control": {"eff": 0.6}},  # hunt skip rows parse fine
-    ]
-    bench_dir = tmp_path / "BENCH"
-    bench_dir.mkdir()
-    with open(bench_dir / "window_hunt.jsonl", "w") as f:
-        f.write("not json\n")
-        for r in recs:
-            f.write(_json.dumps(r) + "\n")
-    monkeypatch.setattr(
-        _bench.os.path, "abspath", lambda p: str(tmp_path / "bench.py")
-    )
-    best = _bench.best_clean_window_record()
-    assert best["giant_eff"] == 0.81 and best["ts"] == "t1"
-    assert best["clean_probe_parity"] == 0.95
-    assert best["sixwave_steady_state_eff"] == 0.7
-    # no file at all -> empty dict, never raises
-    monkeypatch.setattr(
-        _bench.os.path, "abspath", lambda p: str(tmp_path / "nowhere" / "bench.py")
-    )
-    assert _bench.best_clean_window_record() == {}
 
 
 # ---------------------------------------------------------------- pagerank priority
@@ -630,53 +612,6 @@ def test_canonical_alias_edges_drop_self_and_collapse_chain(spark):
     assert got["https://s/b"] == ("https://s/c", 1, False)
     assert got["https://s/l1"] == (None, None, True)
     assert got["https://s/l2"] == (None, None, True)
-
-
-def test_amplified_docs_crossjoin_equals_union(spark, tmp_path, monkeypatch):
-    """The bench fixture's crossJoin amplifier (used above 64 copies —
-    a union fold of hundreds of branches costs Catalyst O(n^2) analysis)
-    must produce the exact row multiset of the union form, at >1 partition
-    (the first x640 run persisted as ONE partition and measured eff =
-    1/ratio exactly — the serial telltale; BENCH/BASELINE.md §2.6)."""
-    import importlib
-    import os
-    import sys
-
-    docs_path = str(tmp_path / "documents.parquet")
-    spark.createDataFrame(
-        [(1, "alpha beta gamma"), (2, "delta eps"), (3, "zeta")],
-        "doc_id long, text string",
-    ).coalesce(1).write.parquet(docs_path)
-
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    sys.path.insert(0, os.path.join(repo_root, "benchmarks"))
-    try:
-        import probe_quality_scaling as pq
-
-        importlib.reload(pq)
-        monkeypatch.setattr(pq, "SF_DIR", str(tmp_path))
-        monkeypatch.setattr(pq, "AMP_PARTS", 8)
-
-        monkeypatch.setattr(pq, "AMPLIFY", 65)  # crossJoin path
-        cj = pq.amplified_docs(spark)
-        assert cj.rdd.getNumPartitions() == 8
-
-        from pyspark.sql import functions as F
-
-        base = spark.read.parquet(docs_path)
-        union = None
-        for r in range(65):
-            c = base.select(
-                (F.col("doc_id") + r * 1_000_000).alias("doc_id"),
-                F.regexp_replace("text", " ", f" q{r}z ").alias("text"),
-            )
-            union = c if union is None else union.unionByName(c)
-
-        a = sorted(map(tuple, cj.collect()))
-        b = sorted(map(tuple, union.collect()))
-        assert a == b and len(a) == 195
-    finally:
-        sys.path.pop(0)
 
 
 def test_dedup_narrow_exchange_row_identical(spark):
