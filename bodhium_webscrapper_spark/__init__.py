@@ -8,7 +8,8 @@ see ``/root/reference/app.py``) as idiomatic Spark DataFrame stages:
   (reference analogue: ``app.py:272-295,381-383``)
 - trafilatura-style text extraction, byte-identical per url — pandas UDF
   (reference analogue: Gemini extraction stage, ``app.py:591-682``)
-- partitioned-bloom URL-seen membership + exact anti-join
+- exact URL-seen anti-join on ``url_hash`` (broadcast, or shuffled past
+  a size threshold)
   (reference analogue: in-memory ``seen_urls`` set, ``app.py:376-390``)
 - per-host politeness budget with host-hash salting against mega-domain skew
   (reference analogue: ``asyncio.sleep(1)`` + MAX_URLS, ``app.py:303,973-974``)

@@ -6,7 +6,6 @@ from bodhium_webscrapper_spark.functions.canonicalize import (  # noqa: F401
 )
 from bodhium_webscrapper_spark.functions.extract import (  # noqa: F401
     extract_links_py,
-    extract_links_udf,
     extract_text_py,
     extract_text_udf,
 )

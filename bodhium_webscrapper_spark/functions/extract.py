@@ -108,32 +108,6 @@ def extract_text_udf(html: pd.Series) -> pd.Series:
     return html.map(extract_text_py)
 
 
-@pandas_udf(ArrayType(StringType()))
-def extract_links_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_links_py)
-
-
-_PAGE_STRUCT = StructType(
-    [
-        StructField("text", StringType()),
-        StructField("links", ArrayType(StringType())),
-    ]
-)
-
-
-@pandas_udf(_PAGE_STRUCT)
-def extract_page_udf(html: pd.Series) -> pd.DataFrame:
-    """One-pass extraction: text + outlinks from a single Arrow transfer of
-    the html payload (the payload is by far the widest column — shipping it
-    to Python once instead of twice halves the UDF cost of a wave)."""
-    return pd.DataFrame(
-        {
-            "text": html.map(extract_text_py),
-            "links": html.map(extract_links_py),
-        }
-    )
-
-
 _PAGE_OUTLINKS_STRUCT = StructType(
     [
         StructField("text", StringType()),

@@ -114,44 +114,6 @@ def minhash_signature(shingles: Column, n_hashes: int = 32) -> Column:
     )
 
 
-def _minhash_np_udf(n_hashes: int):
-    """Vectorized MinHash over JVM-computed shingle hashes.
-
-    The JVM computes xxhash64 per distinct shingle ONCE (array<long>); this
-    UDF applies n universal-hash permutations (a*h+b over 2^64) with one
-    numpy broadcast per row. For wide signatures this beats the pure-JVM
-    32-element array expression, which exceeds codegen limits and falls back
-    to interpreted evaluation. Permutation constants are a pure function of
-    n_hashes (deterministic across runs/executors).
-    """
-    rng = np.random.RandomState(0xC0FFEE ^ n_hashes)
-    a = (rng.randint(1, 2**62, size=n_hashes, dtype=np.uint64) << np.uint64(1)) | np.uint64(1)
-    b = rng.randint(0, 2**62, size=n_hashes, dtype=np.uint64)
-
-    @pandas_udf(ArrayType(LongType()))
-    def sig(shingle_hashes: pd.Series) -> pd.Series:
-        out = []
-        err = np.errstate(over="ignore")
-        with err:
-            for hs in shingle_hashes:
-                if hs is None or len(hs) == 0:
-                    out.append(np.zeros(n_hashes, dtype=np.int64))
-                    continue
-                h = np.asarray(hs, dtype=np.int64).view(np.uint64)
-                perms = h[:, None] * a + b  # mod 2^64 via natural overflow
-                out.append(perms.min(axis=0).view(np.int64))
-        return pd.Series(out)
-
-    return sig
-
-
-def minhash_signature_fast(shingles: Column, n_hashes: int = 32) -> Column:
-    """numpy-backed signature: shingle hashing stays JVM-side, permutations
-    run vectorized in one Arrow batch pass."""
-    shingle_hashes = F.transform(shingles, lambda s: F.xxhash64(s))
-    return _minhash_np_udf(n_hashes)(shingle_hashes)
-
-
 # mixing constants for rolling k-gram hashes (fixed, deterministic)
 _SHINGLE_MIX = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x27D4EB2F165667C5)
 

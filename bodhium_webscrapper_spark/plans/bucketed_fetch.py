@@ -1,7 +1,7 @@
 """Bucketed storage-partitioned fetch — the zero-broadcast scale path.
 
-The wave loop's default fetch broadcasts the politeness-capped wave into a
-hash probe of pages (plans/frontier.py). The broadcast build is
+The wave loop fetches a wave up to ``broadcast_wave_threshold`` rows by
+broadcasting it into a hash probe of pages (plans/frontier.py). The broadcast build is
 driver-serial — measured ~0.7 s per million keys (a probe script of
 commit 0e901c5, deleted since) — which is fine for 10^5-10^7-row waves
 but becomes the bottleneck for 10^8-row waves, where no broadcast of any
@@ -33,7 +33,7 @@ Trade-offs, stated honestly:
   (``sortBy(url_hash)`` at write time).
 - Spark's bucketed joins require session catalogs (``saveAsTable``); the
   SnapshotStore's plain-directory artifacts stay the default, and this
-  module is the opt-in scale path.
+  module is the path only waves above ``broadcast_wave_threshold`` take.
 """
 
 from __future__ import annotations

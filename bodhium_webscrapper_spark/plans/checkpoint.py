@@ -107,7 +107,7 @@ class SnapshotStore:
         exchange-free (plans/bucketed_fetch.py). Stores whose ``wave_dir``
         is not a filesystem path implement this as their native clustered
         write (Iceberg: ``partitionedBy(bucket(N, key))``); CrawlJob feature-
-        detects the method and refuses the bucketed strategy without it."""
+        detects the method and broadcasts every wave's fetch without it."""
         from bodhium_webscrapper_spark.plans.bucketed_fetch import write_bucketed
 
         path = self.wave_dir(wave, name)

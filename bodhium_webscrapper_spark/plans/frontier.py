@@ -8,10 +8,9 @@ empty-checks (mirroring the reference's source-fallback control flow).
 
 Wave t (every stage a DataFrame; schema of frontier rows:
 url_hash, canonical_url, host, depth, priority, retry_count) runs two
-actions, the two artifact writes (the bucketed fetch strategy adds a
-third, narrow one: the numeric-only wave-table write); counts/metrics
-come free from parquet footers and the next frontier is DERIVED, not
-materialized:
+actions, the two artifact writes (a bucketed wave adds a third, narrow
+one: the numeric-only wave-table write); counts/metrics come free from
+parquet footers and the next frontier is DERIVED, not materialized:
 
   frontier_t = explode(page_results_{t-1}.outlinks) ∪ pending misses
                (lazy plan over committed artifacts; wave 0: seeds)
@@ -26,11 +25,12 @@ materialized:
   scheduled  = per-host top-budget window, host-hash salted        [W1/W3]
                → global wave cap, ordered (priority desc, url_hash)[W2]
                → WRITE (job 1)
-  fetched    = pages ⋈ scheduled (default: broadcast-hash — normal
-               waves carry the numeric attrs in the broadcast, ONE
-               join; giant waves keys-only semi-join + attrs shuffle.
-               fetch_strategy="bucketed": zero-broadcast zero-exchange
-               storage-partitioned join of same-bucketed tables)    [J1/S4]
+  fetched    = pages ⋈ scheduled, picked by the wave's footer row
+               count: up to broadcast_wave_threshold a broadcast-hash
+               join carrying the numeric attrs (ONE join); above it a
+               zero-broadcast zero-exchange storage-partitioned join of
+               same-bucketed tables (stores with a write_bucketed
+               seam; others broadcast at every size)               [J1/S4]
   extracted  = ONE fused pandas-UDF pass: text + canonicalized
                same-host outlinks from a single Arrow transfer     [U1/U2/P4/P7]
                → WRITE page_results (job 2)
@@ -50,7 +50,10 @@ crawl delays, default config, 3 waves) measured 8 jobs per wave:
                          scheduled write
   fetch (2)     scheduled-wave broadcast, page_results write
 
-before which run() counts the canonicalized seeds (3 jobs, once).
+before which run() counts the canonicalized seeds (3 jobs, once). A
+bucketed wave (above broadcast_wave_threshold) instead writes its
+numeric-only wave table (bucket exchange + write) and fetches with no
+broadcast; its first such wave also writes the bucketed pages layout once.
 
 Determinism: scheduling order is a pure function of the data — sort key
 (priority DESC, url_hash ASC); no monotonically_increasing_id, no clocks,
@@ -58,11 +61,11 @@ no partition-dependent values — so a resume from snapshot replays the exact
 remaining order (tested in tests/test_resume.py).
 
 Scale notes (100 TB / 10^10 URLs):
-- pages is the huge side and is never shuffled: the fetch join broadcasts
-  the (politeness-capped, hence small) wave of scheduled URLs into a
-  broadcast-hash-join probe of pages. On Iceberg, pages would be bucketed by
-  ``bucket(N, url_hash)`` making this storage-partitioned even for giant
-  waves.
+- pages is the huge side and is never shuffled per wave: the fetch join
+  broadcasts the (politeness-capped, hence small) wave of scheduled URLs
+  into a broadcast-hash-join probe of pages; a giant wave joins bucket to
+  bucket against a pages layout bucketed once by ``bucket(N, url_hash)``
+  (on Iceberg that would be the table's partition spec).
 - seen is never broadcast past ``seen_broadcast_threshold``: above it the
   anti-join shuffles both sides by url_hash (exact, no pre-filter — a
   filter in front could not spare the seen side its exchange).
@@ -126,10 +129,6 @@ class CrawlConfig:
     max_urls_per_host_per_wave: int = 10
     max_waves: int = 6
     global_wave_limit: int | None = 5000  # None/0 = politeness-only capping
-    # above this, the global cap switches from TakeOrdered to the exact
-    # distributed threshold-filter form (global_ordered_cap): a 10^7 cap on
-    # a 10^8-row wave must not merge through one partition
-    global_cap_takeordered_threshold: int = 1_000_000
     max_retries: int = 2
     # W3: nominal wave duration used to convert a host's robots
     # crawl_delay_ms into a reduced per-wave budget
@@ -154,14 +153,16 @@ class CrawlConfig:
     # table cannot be a broadcast build) — same pattern as
     # broadcast_wave_threshold below
     robots_broadcast_threshold: int = 1_000_000
-    # fetch-join broadcast cutover: up to this wave size the scheduled
-    # wave broadcasts WITH its numeric attributes (url_hash, depth,
-    # priority, wave — 32 B/row, so 4M rows ≈ 128 MB, sized for a standard
-    # 4-8 GB executor) and ONE inner hash join prunes pages and attaches
-    # the attributes in the same probe; above it, the keys-only broadcast
-    # semi-join + a shuffle of the narrow extraction output takes over
-    # (the broadcast build is driver-serial fixed cost, the shuffle scales
-    # with cores). pages never shuffle on either path.
+    # fetch-join cutover, on the wave's footer row count: up to this size
+    # the scheduled wave broadcasts WITH its numeric attributes (url_hash,
+    # depth, priority, wave — 32 B/row, so 4M rows ≈ 128 MB, sized for a
+    # standard 4-8 GB executor) and ONE inner hash join prunes pages and
+    # attaches the attributes in the same probe; above it, the wave takes
+    # the bucketed storage-partitioned join (plans/bucketed_fetch.py: no
+    # broadcast, whose build is driver-serial fixed cost, and no exchange).
+    # The bucketed path needs a store with a ``write_bucketed`` seam;
+    # stores without one (IcebergSnapshotStore) broadcast at every size.
+    # pages never shuffle per wave on either path.
     broadcast_wave_threshold: int = 4_000_000
     # seen anti-join cutover: up to this many seen keys the seen side is
     # broadcast; above it, the exact shuffle anti-join on url_hash
@@ -205,19 +206,15 @@ class CrawlConfig:
     # Default OFF: arbitrary seed lists may contain duplicates, and the
     # contract is trusted, not checked (checking would re-pay the shuffle).
     seeds_distinct: bool = False
-    # fetch physical strategy:
-    #  "broadcast" (default) — the adaptive fused-broadcast / keys-only
-    #    semi-join fetch below; right whenever the wave fits a broadcast.
-    #  "bucketed" — zero-broadcast storage-partitioned fetch
-    #    (plans/bucketed_fetch.py): pages are rewritten ONCE into a
-    #    bucket(url_hash) layout (amortized across every wave; on Iceberg
-    #    it is just the table's partition spec) and each wave's scheduled
-    #    set is written bucketBy the same spec, so the fetch join plans
-    #    with no broadcast, no exchange, and no sort — the 10^8-row-wave
-    #    path, where the broadcast build's driver-serial ~0.7 s/M keys
-    #    (measured by a probe script of commit 0e901c5, deleted since) is
-    #    the loop's residual fixed cost. Requires a store with a ``write_bucketed`` seam.
-    fetch_strategy: str = "broadcast"
+    # bucket count of the bucketed fetch path (waves above
+    # broadcast_wave_threshold): pages are rewritten ONCE into a
+    # bucket(url_hash) layout (amortized across every wave; on Iceberg it
+    # is just the table's partition spec) and each such wave's scheduled
+    # set is written bucketBy the same spec, so the fetch join plans with
+    # no broadcast, no exchange and no sort — the 10^8-row-wave path,
+    # where the broadcast build's driver-serial ~0.7 s/M keys (measured by
+    # a probe script of commit 0e901c5, deleted since) is the loop's
+    # residual fixed cost
     fetch_buckets: int = 64
     # link-authority prioritization: every N committed waves, recompute
     # fixed-point integer PageRank over the FULL committed link graph and
@@ -232,8 +229,8 @@ class CrawlConfig:
     rank_priority_weight: float = 1.0
     rank_iterations: int = 2
     # existing bucketed pages layout to re-attach (register_bucketed);
-    # default: written at job init under <checkpoint_dir>/_bucketed_pages
-    # iff absent — the one-time corpus rewrite
+    # default: <checkpoint_dir>/_bucketed_pages, written the first time a
+    # wave goes bucketed iff absent — the one-time corpus rewrite
     bucketed_pages_path: str | None = None
     # drop tracking query params (utm_*/gclid/fbclid family,
     # functions/canonicalize.py:TRACKING_PARAM_RE) from every frontier URL
@@ -390,35 +387,10 @@ class CrawlJob:
         # lang/warc_ts
         cols = ["url_hash", "url", "html"] + (["text"] if config.verify_extraction else [])
         self.pages = spark.read.parquet(pages_path).select(*cols)
-        # bucketed fetch strategy: attach (or create once) the bucketed pages
-        # layout and name the per-wave scheduled table. The pages rewrite is
-        # one-time init work amortized across every wave of every run that
-        # points at the same layout — the plain-parquet analogue of an
-        # Iceberg pages table whose partition spec is bucket(N, url_hash).
-        self._pages_table: str | None = None
-        if config.fetch_strategy == "bucketed":
-            if not hasattr(self.store, "write_bucketed"):
-                raise ValueError(
-                    "fetch_strategy='bucketed' needs a store with a "
-                    "write_bucketed seam (SnapshotStore has one; implement "
-                    "the clustered write for custom stores)"
-                )
-            self._pages_table = f"pages_bkt_{job_id}"
-            self._wave_table = f"wave_scheduled_{job_id}"
-            bpath = config.bucketed_pages_path or os.path.join(
-                checkpoint_dir, "_bucketed_pages"
-            )
-            if os.path.exists(os.path.join(bpath, "_SUCCESS")):
-                register_bucketed(spark, self._pages_table, bpath, config.fetch_buckets)
-            else:
-                write_bucketed(self.pages, self._pages_table, config.fetch_buckets, path=bpath)
-            missing = set(cols) - set(spark.table(self._pages_table).columns)
-            if missing:
-                raise ValueError(
-                    f"bucketed pages layout at {bpath} lacks columns {missing} "
-                    "this config needs (e.g. written without verify_extraction's "
-                    "text column): rewrite it or point elsewhere"
-                )
+        self._bucketed_pages_path = config.bucketed_pages_path or os.path.join(
+            checkpoint_dir, "_bucketed_pages"
+        )
+        self._bucketed = None  # (pages table, wave table): _bucketed_tables()
         # fused extract+canonicalize UDF: one Arrow pass yields text AND the
         # page's canonicalized, scope-filtered outlinks
         self._extract_udf = make_extract_page_outlinks_udf(
@@ -536,6 +508,34 @@ class CrawlJob:
             allowed = robots_allowed(F.col("_r_rules"), F.col("canonical_url"))
             self._policy = (table, allowed, budget)
         return self._policy
+
+    def _bucketed_tables(self) -> tuple[str, str]:
+        """The bucketed fetch path's (pages table, wave table) names, set up
+        the first time a wave goes bucketed and kept for the job's life.
+
+        Attaches the bucketed pages layout (``register_bucketed``, metadata
+        only) when one exists at ``bucketed_pages_path``, and writes it
+        otherwise. The rewrite is one-time work amortized across every wave
+        of every run that points at the same layout — the plain-parquet
+        analogue of an Iceberg pages table whose partition spec is
+        bucket(N, url_hash)."""
+        if self._bucketed is None:
+            spark, cfg = self.spark, self.config
+            pages_table = f"pages_bkt_{self.job_id}"
+            bpath = self._bucketed_pages_path
+            if os.path.exists(os.path.join(bpath, "_SUCCESS")):
+                register_bucketed(spark, pages_table, bpath, cfg.fetch_buckets)
+            else:
+                write_bucketed(self.pages, pages_table, cfg.fetch_buckets, path=bpath)
+            missing = set(self.pages.columns) - set(spark.table(pages_table).columns)
+            if missing:
+                raise ValueError(
+                    f"bucketed pages layout at {bpath} lacks columns {missing} "
+                    "this config needs (e.g. written without verify_extraction's "
+                    "text column): rewrite it or point elsewhere"
+                )
+            self._bucketed = (pages_table, f"wave_scheduled_{self.job_id}")
+        return self._bucketed
 
     def _dedup_first_wins(self, frontier: DataFrame) -> DataFrame:
         return dedup_first_wins_frontier(frontier)
@@ -748,13 +748,13 @@ class CrawlJob:
         removed count was a full Spark job of fixed driver latency — the
         dominant per-wave cost at small wave sizes and the reason round-1
         scaling efficiency collapsed to 0.39. The wave runs two actions —
-        the scheduled write and the page_results write — plus, under the
-        bucketed fetch strategy, one narrow third: the numeric-only
-        (32 B/row) bucketed wave-table write, read back from the scheduled
-        artifact's footers rather than recomputed. AQE runs each exchange
-        and broadcast of an action as a job of its own: 6 schedule + 2
-        fetch jobs per wave as measured (the list is in the module
-        docstring).
+        the scheduled write and the page_results write — plus, on a wave
+        above ``broadcast_wave_threshold``, one narrow third: the
+        numeric-only (32 B/row) bucketed wave-table write, read back from
+        the scheduled artifact's footers rather than recomputed. AQE runs
+        each exchange and broadcast of an action as a job of its own: 6
+        schedule + 2 fetch jobs per wave as measured (the list is in the
+        module docstring).
         """
         cfg = self.config
         t0 = time.time()
@@ -845,11 +845,7 @@ class CrawlJob:
             # small caps: TakeOrdered (per-partition top-k + driver merge);
             # giant caps: exact threshold-filter form — no single-partition
             # stage (operators/politeness.global_ordered_cap)
-            capped = global_ordered_cap(
-                capped,
-                cfg.global_wave_limit,
-                takeordered_threshold=cfg.global_cap_takeordered_threshold,
-            )
+            capped = global_ordered_cap(capped, cfg.global_wave_limit)
         self.store.write(wave, "scheduled", self._assign_order(capped, wave))
         dedup_metrics = observed(dedup_obs)
         # None: the observed stage was dropped (a wave that schedules
@@ -857,8 +853,17 @@ class CrawlJob:
         n_deduped = dedup_metrics["n"] if dedup_metrics else deduped.count()
         if gate_cache is not None:  # count-split cache served the write
             gate_cache.unpersist()
-        if cfg.fetch_strategy == "bucketed":
+        n_scheduled = self.store.row_count(wave, "scheduled")  # footer, no job
+        # the fetch path, picked from the footer count: a wave too big to
+        # broadcast takes the bucketed join wherever the store can write a
+        # bucketed artifact (see broadcast_wave_threshold)
+        bucketed = n_scheduled > cfg.broadcast_wave_threshold and hasattr(
+            self.store, "write_bucketed"
+        )
+        scheduled = self.store.read(self.spark, wave, "scheduled")
+        if bucketed:
             sc.setJobDescription(f"w{wave}:bucketed_twin")
+            pages_table, wave_table = self._bucketed_tables()
             # NARROW bucketed twin for the fetch side (r5): the durable
             # ``scheduled`` artifact above is written plainly — no exchange,
             # straight from the politeness output partitioning — and the
@@ -875,28 +880,21 @@ class CrawlJob:
             self.store.write_bucketed(
                 wave,
                 "scheduled_bkt",
-                self.store.read(self.spark, wave, "scheduled").select(
-                    "url_hash", "depth", "priority", "wave"
-                ),
-                self._wave_table,
+                scheduled.select("url_hash", "depth", "priority", "wave"),
+                wave_table,
                 cfg.fetch_buckets,
             )
-        scheduled = self.store.read(self.spark, wave, "scheduled")
-        n_scheduled = self.store.row_count(wave, "scheduled")  # footer, no job
         t = mark("schedule", t)
         sc.setJobDescription(f"w{wave}:fetch_extract")
 
-        # fetch: pages are NEVER shuffled, whatever the wave size.
-        #   1. the politeness-capped wave is broadcast into a hash probe of
-        #      pages: the 100 TB side is scanned once and probed in place —
-        #      the plain-parquet analogue of Iceberg storage-partitioned
-        #      bucket(N, url_hash) + runtime filtering. Normal waves
-        #      broadcast the NUMERIC attributes too (32 B/row) so ONE inner
-        #      join both prunes pages and attaches depth/priority/wave;
-        #      giant waves (> broadcast_wave_threshold) broadcast keys only
-        #      (8 B/row) as a semi-join and shuffle the narrow extraction
-        #      output onto the attrs instead (broadcast build is
-        #      driver-serial fixed cost; the shuffle scales with cores).
+        # fetch: pages are NEVER shuffled per wave, whatever its size.
+        #   1. a wave up to broadcast_wave_threshold is broadcast with its
+        #      NUMERIC attributes (32 B/row) into a hash probe of pages: the
+        #      100 TB side is scanned once and probed in place, and ONE
+        #      inner join both prunes pages and attaches depth/priority/
+        #      wave. A bigger wave joins bucket b of its narrow wave table
+        #      against bucket b of pages: no broadcast (nothing
+        #      driver-serial), no exchange, no sort.
         #   2. ONE fused pandas-UDF pass over the pruned pages extracts text
         #      AND resolves+canonicalizes the outlinks (html never travels
         #      past this projection, and outlink canonicalization shares its
@@ -945,66 +943,30 @@ class CrawlJob:
             extract_cols.append(
                 F.col("_page.text").eqNullSafe(F.col("text")).alias("golden_ok")
             )
-        if cfg.fetch_strategy == "bucketed":
-            # storage-partitioned: bucket b of the (narrow, numeric-only)
-            # wave table streams against bucket b of pages — no broadcast
-            # (nothing driver-serial), no exchange, no sort, at ANY wave
-            # size. canonical_url/host are re-derived JVM-side from
-            # pages.url, same as the broadcast path (url_hash equality
-            # implies the strings match — the engine merges 64-bit
-            # collisions identically everywhere), so strings never enter
-            # the wave table's bucket shuffle at all.
-            joined = bucketed_fetch_join(
-                self.spark, self._pages_table, self._wave_table
-            )
-            fetch_plan = (
-                joined.withColumn(
-                    "_page", self._extract_udf(F.col("html"), F.col("url"))
-                )
-                .select(
-                    F.col("url_hash"),
-                    *derived_cols,
-                    F.col("depth"),
-                    F.col("priority"),
-                    F.col("wave"),
-                    *extract_cols,
-                )
-            )
-        elif n_scheduled <= cfg.broadcast_wave_threshold:
+        if bucketed:
+            # bucket b of the (narrow, numeric-only) wave table streams
+            # against bucket b of pages. canonical_url/host are re-derived
+            # JVM-side from pages.url, same as the broadcast path, so
+            # strings never enter the wave table's bucket shuffle at all.
+            joined = bucketed_fetch_join(self.spark, pages_table, wave_table)
+        else:
             attrs = F.broadcast(
                 scheduled.select("url_hash", "depth", "priority", "wave")
             )
-            fetch_plan = (
-                self.pages.join(attrs, "url_hash")
-                .withColumn("_page", self._extract_udf(F.col("html"), F.col("url")))
-                .select(
-                    F.col("url_hash"),
-                    *derived_cols,
-                    F.col("depth"),
-                    F.col("priority"),
-                    F.col("wave"),
-                    *extract_cols,
-                )
+            joined = self.pages.join(attrs, "url_hash")
+        fetch_plan = (
+            joined.withColumn("_page", self._extract_udf(F.col("html"), F.col("url")))
+            .select(
+                F.col("url_hash"),
+                *derived_cols,
+                F.col("depth"),
+                F.col("priority"),
+                F.col("wave"),
+                *extract_cols,
             )
-        else:
-            keys = F.broadcast(scheduled.select("url_hash"))
-            raw = (
-                self.pages.join(keys, "url_hash", "left_semi")
-                .withColumn("_page", self._extract_udf(F.col("html"), F.col("url")))
-                .select(F.col("url_hash"), *derived_cols, *extract_cols)
-            )
-            attrs = scheduled.select("url_hash", "depth", "priority", "wave")
-            # same column order as the broadcast path (one artifact schema)
-            final_cols = ["url_hash", "canonical_url", "host", "depth",
-                          "priority", "wave", "text", "outlinks", "n_links"]
-            if cfg.honor_meta_robots:
-                final_cols.append("noindex")
-            if cfg.verify_extraction:
-                final_cols.append("golden_ok")
-            fetch_plan = raw.join(attrs, "url_hash").select(*final_cols)
+        )
         # the bucketed join elides its sorts only while it plans and runs
         # under bucket_ordering (scoped: the session value is restored)
-        bucketed = cfg.fetch_strategy == "bucketed"
         with bucket_ordering(self.spark) if bucketed else nullcontext():
             self.store.write(wave, "page_results", fetch_plan)
         n_fetched = self.store.row_count(wave, "page_results")  # footer, no job

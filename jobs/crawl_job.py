@@ -68,13 +68,11 @@ def main() -> int:
     p.add_argument("--rank-weight", type=float, default=1.0)
     p.add_argument("--verify-extraction", action="store_true")
     p.add_argument(
-        "--fetch-strategy", choices=["broadcast", "bucketed"], default="broadcast",
-        help="bucketed = zero-broadcast storage-partitioned fetch: pages are "
-        "bucketed once by url_hash (amortized; re-attached on resume) and "
-        "each wave's scheduled set is written bucketBy the same spec — the "
-        "10^8-row-wave path",
+        "--fetch-buckets", type=int, default=64,
+        help="bucket count of the storage-partitioned fetch that waves too "
+        "big to broadcast take: pages are bucketed once by url_hash "
+        "(amortized; re-attached on resume)",
     )
-    p.add_argument("--fetch-buckets", type=int, default=64)
     p.add_argument(
         "--seeds-distinct", action="store_true",
         help="declare the seed list duplicate-free (e.g. a full recrawl from "
@@ -190,7 +188,6 @@ def main() -> int:
         max_waves=args.max_waves,
         global_wave_limit=args.global_wave_limit,
         verify_extraction=args.verify_extraction,
-        fetch_strategy=args.fetch_strategy,
         fetch_buckets=args.fetch_buckets,
         seeds_distinct=args.seeds_distinct,
         seeds_canonical=args.seeds_canonical,

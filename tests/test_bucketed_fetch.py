@@ -1,7 +1,8 @@
 """Bucketed storage-partitioned fetch (plans/bucketed_fetch.py): the
-zero-broadcast 10^8-row-wave path must (a) produce exactly the broadcast
-path's rows and (b) plan with NO exchange, NO broadcast, and NO sort on
-either side of the join."""
+zero-broadcast path that waves above ``broadcast_wave_threshold`` take must
+(a) produce exactly the broadcast path's rows and (b) plan with NO exchange,
+NO broadcast, and NO sort on either side of the join. The loop tests force
+it with ``broadcast_wave_threshold=0``."""
 
 from __future__ import annotations
 
@@ -77,9 +78,9 @@ def test_bucketed_join_rows_identical_to_broadcast(spark, bucketed_tables):
 
 @pytest.mark.parametrize("preset", [None, "false"])
 def test_bucketed_crawl_restores_session_conf(spark, crawl_fixture, tmp_path, preset):
-    """A fetch_strategy="bucketed" crawl scopes the bucketed-scan ordering
-    conf to its fetch actions: afterwards the session reads exactly as it
-    did before the run, whether the conf was unset or set explicitly."""
+    """A bucketed crawl scopes the bucketed-scan ordering conf to its
+    fetch actions: afterwards the session reads exactly as it did before
+    the run, whether the conf was unset or set explicitly."""
     if preset is None:
         spark.conf.unset(_ORDERING_CONF)
     else:
@@ -89,7 +90,7 @@ def test_bucketed_crawl_restores_session_conf(spark, crawl_fixture, tmp_path, pr
         crawl_fixture["pages"],
         spark.read.parquet(crawl_fixture["seeds"]),
         spark.read.parquet(crawl_fixture["robots"]),
-        CrawlConfig(max_waves=2, fetch_strategy="bucketed", fetch_buckets=8),
+        CrawlConfig(max_waves=2, broadcast_wave_threshold=0, fetch_buckets=8),
         os.path.join(str(tmp_path), "bkt_conf"),
     )
     try:
@@ -97,3 +98,147 @@ def test_bucketed_crawl_restores_session_conf(spark, crawl_fixture, tmp_path, pr
         assert spark.conf.get(_ORDERING_CONF, None) == preset
     finally:
         spark.conf.unset(_ORDERING_CONF)
+
+
+# ------------------------------------------------------------ in the loop
+def _run_job(spark, crawl_fixture, tmp, tag, max_waves=3, **cfg_kwargs):
+    job = CrawlJob(
+        spark,
+        crawl_fixture["pages"],
+        spark.read.parquet(crawl_fixture["seeds_full"]),
+        spark.read.parquet(crawl_fixture["robots"]),
+        CrawlConfig(max_waves=max_waves, **cfg_kwargs),
+        os.path.join(tmp, tag),
+        job_id=tag,
+    )
+    return job, job.run()
+
+
+def _drop_tables(spark, *tags):
+    for tag in tags:
+        for t in (f"pages_bkt_{tag}", f"wave_scheduled_{tag}"):
+            spark.sql(f"DROP TABLE IF EXISTS {t}")
+
+
+def _assert_same_crawl(spark, a, b):
+    """crawl_order, seen_set, extracted and every wave's full page_results
+    artifact (schema included) are identical."""
+    assert [tuple(r) for r in a.crawl_order().collect()] == [
+        tuple(r) for r in b.crawl_order().collect()
+    ]
+    for view in ("seen_set", "extracted"):
+        x, y = getattr(a, view)(), getattr(b, view)()
+        assert x.schema == y.schema, view
+        rows = sorted(x.collect())
+        assert rows and rows == sorted(y.collect()), view
+    assert a.store.committed_wave() == b.store.committed_wave()
+    for w in range(a.store.committed_wave() + 1):
+        x = a.store.read(spark, w, "page_results")
+        y = b.store.read(spark, w, "page_results")
+        assert x.columns == y.columns, w
+        assert x.exceptAll(y).isEmpty() and y.exceptAll(x).isEmpty(), w
+
+
+def test_bucketed_loop_identical_to_broadcast(spark, crawl_fixture, tmp_path):
+    """A crawl whose every wave takes the bucketed fetch changes ONLY the
+    physical plan: crawl order, seen set, extracted rows and the page_results
+    artifacts are bit-identical to the default broadcast loop."""
+    tmp = str(tmp_path)
+    jb, sb = _run_job(spark, crawl_fixture, tmp, "bk_bcast")
+    jk, sk = _run_job(
+        spark, crawl_fixture, tmp, "bk_bkt",
+        broadcast_wave_threshold=0, fetch_buckets=8,
+    )
+    try:
+        assert sb["total_scheduled"] == sk["total_scheduled"] > 0
+        for w in range(jk.store.committed_wave() + 1):
+            assert jk.store.has_artifact(w, "scheduled_bkt"), w
+            assert not jb.store.has_artifact(w, "scheduled_bkt"), w
+        _assert_same_crawl(spark, jb, jk)
+    finally:
+        _drop_tables(spark, "bk_bkt")
+
+
+def test_bucketed_fetch_switches_mid_run(spark, crawl_fixture, tmp_path):
+    """The fetch path is picked per wave from its footer row count: with
+    the threshold between wave 0's and wave 1's scheduled counts, wave 0
+    broadcasts and wave 1 goes bucketed, and the crawl equals the default
+    run. ``__init__`` writes no bucketed layout; the first bucketed wave
+    does."""
+    tmp = str(tmp_path)
+    jd, sd = _run_job(spark, crawl_fixture, tmp, "sw_default")
+    n0, n1 = (w["scheduled"] for w in sd["waves"][:2])
+    assert 0 < n0 < n1, "fixture: wave 1 must schedule more than wave 0"
+    job = CrawlJob(
+        spark,
+        crawl_fixture["pages"],
+        spark.read.parquet(crawl_fixture["seeds_full"]),
+        spark.read.parquet(crawl_fixture["robots"]),
+        CrawlConfig(max_waves=3, broadcast_wave_threshold=n0, fetch_buckets=8),
+        os.path.join(tmp, "sw_switch"),
+        job_id="sw_switch",
+    )
+    bpath = os.path.join(tmp, "sw_switch", "_bucketed_pages")
+    assert not os.path.exists(bpath)
+    try:
+        job.run()
+        assert not job.store.has_artifact(0, "scheduled_bkt")
+        assert job.store.has_artifact(1, "scheduled_bkt")
+        assert os.path.exists(os.path.join(bpath, "_SUCCESS"))
+        _assert_same_crawl(spark, jd, job)
+    finally:
+        _drop_tables(spark, "sw_switch")
+
+
+def test_bucketed_loop_resume_reattaches_layout(spark, crawl_fixture, tmp_path):
+    """A resumed bucketed run re-attaches the existing _bucketed_pages layout
+    (register_bucketed, metadata only) instead of rewriting it, and replays
+    the identical remaining order."""
+    tmp = str(tmp_path)
+    bkt = dict(broadcast_wave_threshold=0, fetch_buckets=8)
+    jf, _ = _run_job(spark, crawl_fixture, tmp, "bk_full", **bkt)
+    full_order = [tuple(r) for r in jf.crawl_order().collect()]
+    try:
+        # fresh run, killed after wave 1 (max_waves=2), then resumed to 3
+        _run_job(spark, crawl_fixture, tmp, "bk_resume", max_waves=2, **bkt)
+        bpath = os.path.join(tmp, "bk_resume", "_bucketed_pages")
+        assert os.path.exists(os.path.join(bpath, "_SUCCESS"))
+        mtime = os.path.getmtime(os.path.join(bpath, "_SUCCESS"))
+        jr = CrawlJob(
+            spark,
+            crawl_fixture["pages"],
+            spark.read.parquet(crawl_fixture["seeds_full"]),
+            spark.read.parquet(crawl_fixture["robots"]),
+            CrawlConfig(max_waves=3, **bkt),
+            os.path.join(tmp, "bk_resume"),
+            job_id="bk_resume",
+        )
+        jr.run(resume=True)
+        # layout untouched => re-attach, not rewrite
+        assert os.path.getmtime(os.path.join(bpath, "_SUCCESS")) == mtime
+        assert [tuple(r) for r in jr.crawl_order().collect()] == full_order
+    finally:
+        _drop_tables(spark, "bk_full", "bk_resume")
+
+
+def test_bucketed_wave_table_is_numeric_only(spark, crawl_fixture, tmp_path):
+    """The bucketed path's wave TABLE must carry only the numeric fetch
+    attributes (url_hash/depth/priority/wave): the scheduled artifact keeps
+    the full schema (pending/crawl_order contracts), while the bucket
+    exchange + sort + fetch scan never see the URL/host strings."""
+    jk, _ = _run_job(
+        spark, crawl_fixture, str(tmp_path), "bk_narrow",
+        broadcast_wave_threshold=0, fetch_buckets=8,
+    )
+    try:
+        wave_cols = set(spark.table("wave_scheduled_bk_narrow").columns)
+        assert wave_cols == {"url_hash", "depth", "priority", "wave"}
+        # durable artifact keeps the full frontier schema
+        sched = jk.store.read(spark, 0, "scheduled")
+        assert {"url_hash", "canonical_url", "host", "depth", "priority"} <= set(
+            sched.columns
+        )
+        # and the fetch output still carries the re-derived URL string
+        assert "canonical_url" in jk.extracted().columns
+    finally:
+        _drop_tables(spark, "bk_narrow")

@@ -3,8 +3,7 @@ the optimizations the engine's 100 TB story depends on must be visible in
 the plans, not just intended.
 
 - parquet scans carry PushedFilters + pruned ReadSchema
-- the fetch join broadcasts the wave and never shuffles pages — including
-  waves far above the attr-broadcast cutover (the scale regime)
+- the fetch join broadcasts the wave and never shuffles pages
 - aggregations are partial+final with whole-stage codegen
 - no row-at-a-time Python in the data plane (ArrowEvalPython only)
 """
@@ -49,33 +48,15 @@ def test_fetch_join_never_shuffles_pages(spark, crawl_fixture):
     assert p.count("Exchange hashpartitioning") == 0
 
 
-def test_fetch_semi_join_shuffle_free_at_giant_wave(spark, crawl_fixture):
-    """The scale regime: a wave ABOVE the attr-broadcast cutover still must
-    not shuffle the pages side — only the narrow extraction output may move
-    (broadcast KEYS prune pages in place; html never crosses an exchange)."""
-    from bodhium_webscrapper_spark.functions.extract import extract_page_udf
-
-    pages = spark.read.parquet(crawl_fixture["pages"]).select("url_hash", "url", "html")
-    wave = spark.range(3_000_000).select(
-        F.xxhash64(F.col("id").cast("string")).alias("url_hash")
-    )
-    pruned = pages.join(F.broadcast(wave.select("url_hash")), "url_hash", "left_semi")
-    raw = pruned.withColumn("_page", extract_page_udf(F.col("html"))).select(
-        "url_hash", F.col("_page.text").alias("text")
-    )
-    p = plan_of(raw)
-    # the html-bearing subplan (scan -> semi join -> extract) has no exchange
-    assert p.count("Exchange hashpartitioning") == 0
-    assert "BroadcastHashJoin" in p and "LeftSemi" in p
-
-
 def test_fused_fetch_join_single_join_no_exchange(spark, crawl_fixture):
     """Round-4 fetch shape (normal waves): ONE broadcast inner join carries
     the numeric wave attributes into the pages probe — no post-UDF attrs
     join, zero exchanges anywhere in the fetch plan, and the html column
     never leaves the scan stage."""
     from bodhium_webscrapper_spark.functions.canonicalize import host_of
-    from bodhium_webscrapper_spark.functions.extract import extract_page_udf
+    from bodhium_webscrapper_spark.functions.extract import (
+        make_extract_page_outlinks_udf,
+    )
 
     pages = spark.read.parquet(crawl_fixture["pages"]).select("url_hash", "url", "html")
     wave = spark.range(1000).select(
@@ -86,7 +67,10 @@ def test_fused_fetch_join_single_join_no_exchange(spark, crawl_fixture):
     )
     fetch = (
         pages.join(F.broadcast(wave), "url_hash")
-        .withColumn("_page", extract_page_udf(F.col("html")))
+        .withColumn(
+            "_page",
+            make_extract_page_outlinks_udf("host")(F.col("html"), F.col("url")),
+        )
         .select(
             "url_hash",
             F.col("url").alias("canonical_url"),

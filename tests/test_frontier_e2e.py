@@ -252,7 +252,7 @@ def test_shuffle_seen_resume_identical(spark, crawl_fixture, tmp_path):
 
 def test_physical_knobs_preserve_order(spark, crawl_fixture, tmp_path):
     """Every adaptive physical choice in the wave loop (host-hash salting,
-    attr-join broadcast vs shuffle, broadcast vs shuffle anti-join) is an
+    broadcast vs bucketed fetch, broadcast vs shuffle anti-join) is an
     optimization, not a semantics change: the crawl order must be
     bit-identical under all of them."""
     base = _mk_job(spark, crawl_fixture, tmp_path, "k_base")
@@ -260,7 +260,7 @@ def test_physical_knobs_preserve_order(spark, crawl_fixture, tmp_path):
     expected = _order_tuples(base)
     variants = {
         "k_salt": dict(salt_activation_threshold=0, salt_buckets=8),
-        "k_shuffle_attrs": dict(broadcast_wave_threshold=0),
+        "k_bucketed": dict(broadcast_wave_threshold=0),
         "k_shuffle_seen": dict(seen_broadcast_threshold=0),
         "k_shuffle_robots": dict(robots_broadcast_threshold=0),
     }

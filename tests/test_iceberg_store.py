@@ -206,3 +206,44 @@ def test_iceberg_store_full_loop_resume_compaction_sim(
     # 2 commits (run 1) + 1 crash rewind + 2 commits (resume) = 5 upserts
     assert len(manifest_upserts) == 5
     assert ("rewrite_data_files", "crawl.scheduled") in sim.ops
+
+
+def test_iceberg_store_sim_broadcasts_every_wave_size(spark, crawl_fixture, tmp_path):
+    """IcebergSnapshotStore has no ``write_bucketed`` seam, so a wave above
+    ``broadcast_wave_threshold`` keeps the broadcast fetch: with the
+    threshold at 0 the run completes, sets up no bucketed tables, and gives
+    the default shim run's crawl order, seen set and extracted rows."""
+    from iceberg_sim import FakeIcebergSpark, patched_write_to
+
+    from bodhium_webscrapper_spark.plans.frontier import CrawlConfig, CrawlJob
+    from bodhium_webscrapper_spark.plans.iceberg_store import IcebergSnapshotStore
+
+    tmp = str(tmp_path)
+    shim_job = CrawlJob(
+        spark,
+        crawl_fixture["pages"],
+        spark.read.parquet(crawl_fixture["seeds_full"]),
+        spark.read.parquet(crawl_fixture["robots"]),
+        CrawlConfig(max_waves=3),
+        os.path.join(tmp, "shim"),
+        job_id="ice_bcast_ref",
+    )
+    shim_job.run()
+    sim = FakeIcebergSpark(spark, os.path.join(tmp, "wh"))
+    with patched_write_to(sim):
+        store = IcebergSnapshotStore(sim, "ice", "crawl", job_id="ice_bcast")
+        assert not hasattr(store, "write_bucketed")
+        ice_job = _ice_job(
+            sim, crawl_fixture, CrawlConfig(max_waves=3, broadcast_wave_threshold=0),
+            store,
+        )
+        ice_job.run()
+        assert store.committed_wave() == 2
+        assert ice_job._bucketed is None  # no bucketed layout was set up
+        ice_order = [tuple(r) for r in ice_job.crawl_order().collect()]
+        ice_seen = ice_job.seen_set().collect()
+        ice_text = ice_job.extracted().collect()
+    assert ice_order == [tuple(r) for r in shim_job.crawl_order().collect()]
+    assert sorted(ice_seen) == sorted(shim_job.seen_set().collect())
+    assert sorted(ice_text) == sorted(shim_job.extracted().collect())
+    assert len(ice_text) > 0

@@ -383,31 +383,7 @@ def test_ranked_multiprobe_fewer_probes(spark):
     assert 0 in ranked_ids, "ranked multi-probe must recover it with 3 probes"
 
 
-# ------------------------------------------- 8. fused fetch join (round-4)
-
-def test_giant_fallback_fetch_identical_to_broadcast(spark, crawl_fixture, tmp_path):
-    """broadcast_wave_threshold=0 forces every wave onto the giant-wave
-    fallback (keys-only semi-join + attrs shuffle); the committed artifacts
-    must be row-identical to the default fused broadcast path — the
-    physical cutover is semantics-free."""
-    a = _mk_job(spark, crawl_fixture, tmp_path, "fetch_bcast")
-    b = _mk_job(
-        spark, crawl_fixture, tmp_path, "fetch_giant", broadcast_wave_threshold=0
-    )
-    sa, sb = a.run(), b.run()
-    assert [w["scheduled"] for w in sa["waves"]] == [
-        w["scheduled"] for w in sb["waves"]
-    ]
-    ea = a.extracted().orderBy("url_hash", "wave")
-    eb = b.extracted().orderBy("url_hash", "wave")
-    assert ea.schema == eb.schema
-    assert ea.exceptAll(eb).isEmpty() and eb.exceptAll(ea).isEmpty()
-    # full page_results schema (incl. derived canonical_url/host) matches too
-    ra = a.store.read(spark, 0, "page_results")
-    rb = b.store.read(spark, 0, "page_results")
-    assert ra.columns == rb.columns
-    assert ra.exceptAll(rb).isEmpty()
-
+# ------------------------------------------- 8. async finalize, seeds_canonical
 
 def test_async_finalize_commits_every_wave(spark, crawl_fixture, tmp_path):
     """The background wave-finalize must leave the same committed state a

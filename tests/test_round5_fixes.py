@@ -1,17 +1,16 @@
 """Round-5 regression tests.
 
-Covers: the bucketed storage-partitioned fetch wired into the wave loop
-(row-identical to the broadcast loop, resume re-attaches the layout),
-count_split politeness with NULL hosts (advice r4), the distributed global
-wave cap, IVF sampling without a full-corpus sort, PSL wildcard/exception
-rules, dataset-job output counting through a Hadoop-FS-safe seam, and
-streaming/batch politeness parity.
+Covers: count_split politeness with NULL hosts (advice r4), the distributed
+global wave cap, IVF sampling without a full-corpus sort, PSL
+wildcard/exception rules, dataset-job output counting through a
+Hadoop-FS-safe seam, relative bucketed-table paths, seeds_distinct,
+PageRank-blended priorities, tracking-param stripping, canonical-link
+extraction and the narrow dedup exchange.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
 
 import pytest
 from pyspark.sql import functions as F
@@ -32,66 +31,6 @@ def _run_job(spark, crawl_fixture, tmp, tag, **cfg_kwargs):
     )
     summary = job.run()
     return job, summary
-
-
-# ---------------------------------------------------------------- bucketed loop
-def test_bucketed_loop_identical_to_broadcast(spark, crawl_fixture, tmp_path):
-    """fetch_strategy='bucketed' must change ONLY the physical plan: crawl
-    order, page_results rows, and the seen set are bit-identical to the
-    default broadcast loop on the same input."""
-    tmp = str(tmp_path)
-    jb, sb = _run_job(spark, crawl_fixture, tmp, "r5_bcast")
-    jk, sk = _run_job(
-        spark, crawl_fixture, tmp, "r5_bkt",
-        fetch_strategy="bucketed", fetch_buckets=8,
-    )
-    assert sb["total_scheduled"] == sk["total_scheduled"] > 0
-    order_b = [tuple(r) for r in jb.crawl_order().collect()]
-    order_k = [tuple(r) for r in jk.crawl_order().collect()]
-    assert order_b == order_k
-    res_b = jb.extracted().select("url_hash", "canonical_url", "wave", "text")
-    res_k = jk.extracted().select("url_hash", "canonical_url", "wave", "text")
-    assert res_b.count() == res_k.count() > 0
-    assert res_b.exceptAll(res_k).isEmpty()
-    assert res_k.exceptAll(res_b).isEmpty()
-    assert jb.seen_set().select("url_hash").exceptAll(
-        jk.seen_set().select("url_hash")
-    ).isEmpty()
-    for t in ("pages_bkt_r5_bkt", "wave_scheduled_r5_bkt"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_bucketed_loop_resume_reattaches_layout(spark, crawl_fixture, tmp_path):
-    """A resumed bucketed run re-attaches the existing _bucketed_pages layout
-    (register_bucketed, metadata only) instead of rewriting it, and replays
-    the identical remaining order."""
-    tmp = str(tmp_path)
-    jf, sf = _run_job(
-        spark, crawl_fixture, tmp, "r5_full",
-        fetch_strategy="bucketed", fetch_buckets=8,
-    )
-    full_order = [tuple(r) for r in jf.crawl_order().collect()]
-
-    # fresh run, killed after wave 1 (max_waves=2), then resumed to 3
-    ck = os.path.join(tmp, "r5_resume")
-    seeds = spark.read.parquet(crawl_fixture["seeds_full"])
-    robots = spark.read.parquet(crawl_fixture["robots"])
-    cfg2 = CrawlConfig(max_waves=2, fetch_strategy="bucketed", fetch_buckets=8)
-    CrawlJob(spark, crawl_fixture["pages"], seeds, robots, cfg2, ck,
-             job_id="r5_resume").run()
-    bpath = os.path.join(ck, "_bucketed_pages")
-    assert os.path.exists(os.path.join(bpath, "_SUCCESS"))
-    mtime = os.path.getmtime(os.path.join(bpath, "_SUCCESS"))
-    cfg3 = CrawlConfig(max_waves=3, fetch_strategy="bucketed", fetch_buckets=8)
-    jr = CrawlJob(spark, crawl_fixture["pages"], seeds, robots, cfg3, ck,
-                  job_id="r5_resume")
-    jr.run(resume=True)
-    # layout untouched => re-attach, not rewrite
-    assert os.path.getmtime(os.path.join(bpath, "_SUCCESS")) == mtime
-    assert [tuple(r) for r in jr.crawl_order().collect()] == full_order
-    for t in ("pages_bkt_r5_full", "wave_scheduled_r5_full",
-              "pages_bkt_r5_resume", "wave_scheduled_r5_resume"):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 # ------------------------------------------------- count_split NULL-host (r4 advice)
@@ -342,32 +281,6 @@ def test_write_bucketed_relative_path_lands_in_cwd(spark, tmp_path):
         assert not os.path.exists(os.path.join("spark-warehouse", rel))
     finally:
         spark.sql("DROP TABLE IF EXISTS rel_bkt_t")
-
-
-# ------------------------------------------- narrow wave table (r5, late)
-def test_bucketed_wave_table_is_numeric_only(spark, crawl_fixture, tmp_path):
-    """The bucketed strategy's wave TABLE must carry only the numeric fetch
-    attributes (url_hash/depth/priority/wave): the scheduled artifact keeps
-    the full schema (pending/crawl_order contracts), while the bucket
-    exchange + sort + fetch scan never see the URL/host strings."""
-    tmp = str(tmp_path)
-    jk, sk = _run_job(
-        spark, crawl_fixture, tmp, "r5_narrow",
-        fetch_strategy="bucketed", fetch_buckets=8,
-    )
-    try:
-        wave_cols = set(spark.table("wave_scheduled_r5_narrow").columns)
-        assert wave_cols == {"url_hash", "depth", "priority", "wave"}
-        # durable artifact keeps the full frontier schema
-        sched = jk.store.read(spark, 0, "scheduled")
-        assert {"url_hash", "canonical_url", "host", "depth", "priority"} <= set(
-            sched.columns
-        )
-        # and the fetch output still carries the re-derived URL string
-        assert "canonical_url" in jk.extracted().columns
-    finally:
-        for t in ("pages_bkt_r5_narrow", "wave_scheduled_r5_narrow"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
 
 
 def test_count_split_aggregates_on_host_hash(spark):
