@@ -1,4 +1,4 @@
-.PHONY: test bench perfbench package plans demo clean
+.PHONY: test bench perfbench package demo clean
 
 # the tier-1 suite, as ROADMAP.md runs it
 test:
@@ -14,9 +14,6 @@ perfbench:
 	python3 perfbench/run.py --workload crawl_wide --seed 1 --seconds 1 --trace 0
 	python3 perfbench/run.py --workload curation_suite --seed 1 --seconds 1 --trace 0
 	python -m pytest perfbench -q
-
-plans:
-	python tests/explain_plans.py
 
 package:
 	mkdir -p build && rm -f build/engine.zip && zip -qr build/engine.zip bodhium_webscrapper_spark

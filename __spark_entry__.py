@@ -258,8 +258,9 @@ def q_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J2/A1: URL-seen anti-join with bloom pre-pass (bloom-on == bloom-off).
 
     The bloom is the executor-side DistributedBloom blob table (cogrouped
-    probe) — blob bytes never transit the driver, the same path the wave
-    loop uses at 10^10 seen keys."""
+    probe) — blob bytes never transit the driver. The wave loop does not
+    use it: its seen anti-join is exact with no pre-filter (broadcast, or
+    shuffled above seen_broadcast_threshold)."""
     from bodhium_webscrapper_spark.operators.seen import (
         DistributedBloom, seen_anti_join,
     )
@@ -400,7 +401,7 @@ _Q_BRAND_SQL = """
 
 
 # --------------------------------------------------------------------------
-# join / aggregation queries (reference sinks + report rollups)
+# join / aggregation queries (reference upserts + report rollups)
 # --------------------------------------------------------------------------
 
 def q_fetch_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3789,8 +3790,7 @@ def q_ccnet_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     fluency terciles over the corpus-trained char-bigram familiarity score
     (rare-gram ppm — the LM-free perplexity stand-in, same planting as
     char_familiarity: every 13th doc becomes gibberish and must land in
-    tail). Exact ntile here; the 100 TB path assigns by sampled cutoffs
-    (quality.ccnet_assign_by_cutoffs)."""
+    tail). Exact ntile per language."""
     from bodhium_webscrapper_spark.operators.quality import (
         ccnet_buckets,
         char_ngram_familiarity,

@@ -135,10 +135,10 @@ _ORIGIN_RE = re.compile(r"^(https?://[^/]+)")
 
 
 def resolve_series(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    """Vectorized resolve+canonicalize over aligned Series (the engine of
-    ``resolve_and_canonicalize_udf``; also reused by the fused
-    extract+canonicalize page UDF so outlink canonicalization shares the
-    same Arrow batch as text extraction).
+    """Vectorized resolve+canonicalize of outlinks against the page URLs
+    they were found on, over aligned Series. The fused extract+canonicalize
+    page UDF calls it, so outlink canonicalization shares the same Arrow
+    batch as text extraction.
 
     Fast path: most real-world outlinks are plain absolute paths ("/a/b")
     with no scheme/query/escape/dot-segments — for those, canonical = base
@@ -162,35 +162,6 @@ def resolve_series(urls: pd.Series, bases: pd.Series) -> pd.Series:
             canonicalize_one(u, b) for u, b in zip(urls[slow], bases[slow])
         ]
     return out
-
-
-@pandas_udf(StringType())
-def resolve_and_canonicalize_udf(urls: pd.Series, bases: pd.Series) -> pd.Series:
-    """Canonicalize outlinks relative to the page URL they were found on
-    (see ``resolve_series``)."""
-    return resolve_series(urls, bases)
-
-
-def url_slug(col: Column, max_len: int = 100) -> Column:
-    """Reference filename-slug quirk (P2, app.py:282-295): path with '/'→'_',
-    query replaced by md5[:8] suffix, long slugs truncated + md5[:10].
-    Pure built-ins (regexp_replace + md5 + substring)."""
-    path = F.coalesce(F.parse_url(col, F.lit("PATH")), F.lit("/"))
-    query = F.parse_url(col, F.lit("QUERY"))
-    base = F.regexp_replace(F.regexp_replace(path, "^/", ""), "/", "_")
-    base = F.when(F.length(base) == 0, F.lit("index")).otherwise(base)
-    with_q = F.when(
-        query.isNotNull(),
-        F.concat(base, F.lit("_"), F.substring(F.md5(query), 1, 8)),
-    ).otherwise(base)
-    return F.when(
-        F.length(with_q) > max_len,
-        F.concat(
-            F.substring(with_q, 1, max_len - 11),
-            F.lit("_"),
-            F.substring(F.md5(with_q), 1, 10),
-        ),
-    ).otherwise(with_q)
 
 
 def host_of(col: Column) -> Column:

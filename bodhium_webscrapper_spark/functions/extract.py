@@ -103,11 +103,6 @@ def extract_links_py(html_bytes: bytes | None) -> list[str]:
     return out
 
 
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_py)
-
-
 _PAGE_OUTLINKS_STRUCT = StructType(
     [
         StructField("text", StringType()),
@@ -140,9 +135,8 @@ def make_extract_page_outlinks_udf(link_scope: str = "host"):
     exactly once, and the downstream frontier derivation becomes pure JVM
     (explode + xxhash64) — removing one Spark job plus a full frontier
     write+read per wave (plans/frontier.py). ``text`` stays byte-identical
-    to ``extract_text_py`` (the golden contract); link resolution reuses
-    ``canonicalize.resolve_series`` so results match the standalone
-    ``resolve_and_canonicalize_udf`` exactly.
+    to ``extract_text_py`` (the golden contract); link resolution is
+    ``canonicalize.resolve_series``.
 
     ``page_url`` must be the page's canonical URL (the pages-table contract:
     rows are keyed by xxhash64(url), which only ever matches a frontier row

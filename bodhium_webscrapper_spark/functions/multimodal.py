@@ -22,7 +22,6 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_META_SCHEMA = "media_id long, kind string, n_bytes long, sha256 string"
 FEATURE_SCHEMA = "media_id long, feature array<float>, feat_dim int"
 
 _MAGIC = {
@@ -46,14 +45,6 @@ def magic_kind(payload: Column) -> Column:
     return expr
 
 
-def real_decode_stub(payload: bytes) -> np.ndarray:
-    """Placeholder for the PIL/ffmpeg decode step (libs absent here)."""
-    raise NotImplementedError(
-        "media decode requires an image/audio library not present in this "
-        "environment; inject decode_fn=fake_decode or a real decoder"
-    )
-
-
 def fake_decode(payload: bytes) -> np.ndarray:
     """Deterministic stand-in 'decode': 32-bin byte histogram, L1-normalized.
 
@@ -68,8 +59,9 @@ def fake_decode(payload: bytes) -> np.ndarray:
 
 
 def media_metadata(df: DataFrame, id_col: str, payload_col: str) -> DataFrame:
-    """Typed metadata from the binary column — pure JVM built-ins
-    (``MEDIA_META_SCHEMA``): length, content hash, magic-sniffed kind."""
+    """Typed metadata from the binary column — pure JVM built-ins:
+    ``(media_id long, kind string, n_bytes long, sha256 string)``, i.e.
+    magic-sniffed kind, length and content hash."""
     b = F.col(payload_col)
     return df.select(
         F.col(id_col).cast("long").alias("media_id"),

@@ -94,26 +94,6 @@ def distinct_shingles_col(text_col: Column, k: int = 3) -> Column:
 
 # ---------------------------------------------------------------- minhash
 
-def minhash_signature(shingles: Column, n_hashes: int = 32) -> Column:
-    """MinHash signature: sig[j] = min over shingles of xxhash64(shingle, j).
-
-    Seeding xxhash64 with the permutation index j gives n independent hash
-    families without any Python; array_min + transform keep it one JVM
-    expression per permutation.
-
-    NB: the per-permutation lambda must be unary — PySpark's ``transform``
-    treats a two-parameter lambda as (element, index), which would shadow a
-    ``j=j`` default with the array index.
-    """
-
-    def perm(j: int):
-        return lambda s: F.xxhash64(s, F.lit(j))
-
-    return F.array(
-        *[F.array_min(F.transform(shingles, perm(j))) for j in range(n_hashes)]
-    )
-
-
 # mixing constants for rolling k-gram hashes (fixed, deterministic)
 _SHINGLE_MIX = (0x9E3779B97F4A7C15, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9, 0x27D4EB2F165667C5)
 

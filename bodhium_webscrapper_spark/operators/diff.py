@@ -48,12 +48,6 @@ def snapshot_diff(
     return j.select(F.col(key), status.alias("status"))
 
 
-def diff_counts(diff: DataFrame) -> DataFrame:
-    """Per-status row counts — the report row an incremental scheduler
-    reads to size the next crawl's re-fetch budget."""
-    return diff.groupBy("status").agg(F.count(F.lit(1)).alias("n_urls"))
-
-
 def recrawl_priority(
     diff: DataFrame,
     key: str = "url",

@@ -41,8 +41,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-PACKED_COLS = ["seq_id", "doc_id", "tok_start", "tok_end", "seq_pos"]
-
 
 def doc_token_offsets(
     docs: DataFrame,
@@ -119,7 +117,7 @@ def pack_sequences(
     """Concat-and-chunk packing manifest: one row per (document × training
     sequence it overlaps).
 
-    Output (all int64, ``PACKED_COLS``):
+    Output (all int64):
       - ``seq_id``    — which fixed-length sequence (token interval
                         ``[seq_id*seq_len, (seq_id+1)*seq_len)``)
       - ``doc_id``    — the contributing document

@@ -87,39 +87,6 @@ def pagerank_fixed_point(
     return ranks
 
 
-def priority_from_rank(
-    ranks: DataFrame, n_levels: int = 10, id_col: str = "id", rank_col: str = "rank"
-) -> DataFrame:
-    """Bucket ranks into ``n_levels`` priority levels (1 = highest rank).
-
-    NOT an ``ntile`` over a global ORDER BY — that compiles to a
-    single-partition window, the exact shape this engine bans at frontier
-    scale. Instead: ``approxQuantile`` pulls n_levels-1 rank thresholds to
-    the driver (a control-plane array of a few doubles, same class as the
-    IVF codebook sample), and each row buckets locally against the
-    broadcast-literal thresholds — fully distributed, no shuffle at all
-    beyond the rank computation itself.
-
-    Precision contract, honestly: the THRESHOLDS are approximate
-    (Greenwald-Khanna at relativeError 0.001) and partition-layout
-    dependent, so level boundaries may shift by up to ~0.1% of the rank
-    distribution between runs with different partitioning — the level
-    assignment is deterministic GIVEN the thresholds, not across layouts.
-    approxQuantile also round-trips through doubles, so ranks above 2^53
-    (hub mass near scale*N at ~10^10 nodes) can alias at the boundary.
-    Callers needing layout-exact levels should derive thresholds from the
-    exact rank histogram (the global_ordered_cap technique) — crawl
-    ordering itself never consumes these levels, it orders on the exact
-    integer rank.
-    """
-    qs = [i / n_levels for i in range(1, n_levels)]
-    thresholds = ranks.approxQuantile(rank_col, qs, 0.001)
-    expr = F.lit(n_levels)
-    for level, thr in zip(range(n_levels - 1, 0, -1), thresholds):
-        expr = F.when(F.col(rank_col) > F.lit(int(thr)), F.lit(level)).otherwise(expr)
-    return ranks.select(id_col, rank_col, expr.cast("int").alias("priority_level"))
-
-
 def hits_fixed_point(
     edges: DataFrame,
     src: str = "src",

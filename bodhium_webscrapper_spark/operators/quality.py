@@ -860,13 +860,8 @@ def ccnet_buckets(
     Exact terciles via ``ntile(3)`` over a per-language window with a
     deterministic total order (score asc NULLS LAST, id asc) — bit-stable
     across partitionings, so the SQL oracle replays it. The per-language
-    window is one sort partition per language; at CC scale a single
-    language is 10^9+ docs, so the 100 TB path mirrors what CCNet itself
-    does: compute the two cutoff scores per language from this function on
-    a stratified sample (q_stratified_sample), then assign the full corpus
-    with the pure broadcast-filter ``ccnet_assign_by_cutoffs`` below — one
-    linear scan, no window. The exact and cutoff paths agree everywhere
-    except ties straddling a boundary (pytest-asserted).
+    window is one sort partition per language, so a language with 10^9+
+    docs is one sort task; no job or query here runs at that size.
 
     Output: (id, lang, score, bucket) with bucket in head|middle|tail.
     """
@@ -880,36 +875,6 @@ def ccnet_buckets(
         F.col(score_col),
         F.when(tile == 1, F.lit("head"))
         .when(tile == 2, F.lit("middle"))
-        .otherwise(F.lit("tail"))
-        .alias("bucket"),
-    )
-
-
-def ccnet_assign_by_cutoffs(
-    df: DataFrame,
-    id_col: str,
-    lang_col: str,
-    score_col: str,
-    cutoffs: DataFrame,
-) -> DataFrame:
-    """The scale path for `ccnet_buckets`: assign buckets by comparing each
-    document's score against per-language (head_max, middle_max) cutoffs —
-    a broadcast join plus a CASE, zero shuffle on the corpus. ``cutoffs``
-    has one row per language (bounded by the language inventory → always
-    broadcastable); derive it from `ccnet_buckets` on a sample:
-    ``buckets.groupBy(lang).agg(max(score when head), max(score when middle))``.
-    Boundary ties all land on the lower bucket (<=), which is the only
-    divergence from the exact ntile split. NULL scores and languages
-    absent from ``cutoffs`` fall through both comparisons to 'tail' —
-    matching the exact path's NULLS-LAST ordering (no evidence of fluency
-    = worst bucket)."""
-    out = df.join(F.broadcast(cutoffs), lang_col, "left")
-    return out.select(
-        F.col(id_col),
-        F.col(lang_col),
-        F.col(score_col),
-        F.when(F.col(score_col) <= F.col("head_max"), F.lit("head"))
-        .when(F.col(score_col) <= F.col("middle_max"), F.lit("middle"))
         .otherwise(F.lit("tail"))
         .alias("bucket"),
     )

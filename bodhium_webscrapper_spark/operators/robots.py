@@ -286,28 +286,3 @@ def parse_robots_txt(
         ).alias("allow_prefixes"),
         F.floor(F.min("_delay_s") * 1000).cast("long").alias("crawl_delay_ms"),
     )
-
-
-def parse_robots_sitemaps(
-    df: DataFrame, txt_col: str = "robots_txt", host_col: str = "host"
-) -> DataFrame:
-    """``Sitemap:`` lines from raw robots.txt — ``(host, sitemap_url)``.
-
-    Per RFC 9309 §2.2.4 / sitemaps.org these are GROUP-INDEPENDENT (valid
-    anywhere in the file), so this is a separate one-aggregation pass, not
-    part of :func:`parse_robots_txt`'s group machinery. Output feeds the S1
-    sitemap seed scan. Case-insensitive key; absolute URLs kept verbatim
-    (canonicalization is the seed pipeline's job); distinct per host."""
-    lines = df.select(
-        F.col(host_col).alias("host"),
-        F.explode(F.split(F.col(txt_col), r"\r?\n")).alias("_raw"),
-    )
-    clean = F.trim(F.regexp_replace(F.col("_raw"), r"#.*$", ""))
-    key = F.lower(F.trim(F.regexp_extract(clean, r"^([^:]+):", 1)))
-    val = F.trim(F.regexp_extract(clean, r"^[^:]*:(.*)$", 1))
-    return (
-        lines.select("host", key.alias("_key"), val.alias("sitemap_url"))
-        .filter((F.col("_key") == "sitemap") & (F.col("sitemap_url") != ""))
-        .select("host", "sitemap_url")
-        .distinct()
-    )

@@ -1,9 +1,9 @@
-"""Upsert / job-registry operators (reference Postgres sinks re-expressed).
+"""Upsert operators (the reference's Postgres product writes re-expressed).
 
 The reference upserts products row-at-a-time — ``SELECT by product_hash``
-then ``INSERT ... RETURNING`` (``/root/reference/RDS/app.py:446-508``) — and
-maintains a job registry with status transitions + trigger-stamped
-timestamps (``RDS/app.py:256-444``). On Iceberg these are single
+then ``INSERT ... RETURNING`` (``/root/reference/RDS/app.py:446-508``). Its
+job registry (status transitions, job ids) is control-plane bookkeeping
+with no data-plane operator here. On Iceberg these are single
 ``MERGE INTO`` statements; on the parquet snapshot shim we express the same
 semantics as set operations:
 
@@ -11,7 +11,6 @@ semantics as set operations:
 - merged snapshot = existing ∪ new                              [S10]
 - ingest stats    = counts of new / existing / linked           [A7]
 - link table      = dropDuplicates append                       [J3]
-- status update   = column rewrite with completed_at stamping   [S11]
 
 Determinism: timestamps are injected by the caller (never current_timestamp
 in the data plane).
@@ -23,30 +22,6 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-PRODUCT_COLS = [
-    "productname", "description", "current_price", "original_price",
-    "rating", "review", "image_url", "source_url",
-]
-
-
-def valid_products(products: DataFrame) -> DataFrame:
-    """P8: drop rows unusable as products — blank/missing name or source
-    URL (the reference skips these before its row-at-a-time upsert,
-    RDS/app.py:446-470; here one vectorized filter)."""
-    return products.filter(
-        F.col("productname").isNotNull()
-        & (F.trim(F.col("productname")) != "")
-        & F.col("source_url").isNotNull()
-        & (F.trim(F.col("source_url")) != "")
-    )
-
-
-def truncate_content(col, max_chars: int = 4000):
-    """P9: cap a text column at ``max_chars`` characters (the reference
-    truncates page text before LLM submission, app.py:255-270). Pure JVM
-    substring — safe in the hot path."""
-    return F.substring(col, 1, max_chars)
 
 
 def with_product_hash(products: DataFrame) -> DataFrame:
@@ -116,46 +91,3 @@ def link_table(pairs: DataFrame, left_key: str, right_key: str) -> DataFrame:
     """Many-to-many link rows, dup-safe (ON CONFLICT DO NOTHING analogue,
     RDS/app.py:494-498)."""
     return pairs.select(left_key, right_key).dropDuplicates([left_key, right_key])
-
-
-def deterministic_job_id(raw: str) -> str:
-    """P12 (RDS/app.py:350-366): pass through UUIDs, otherwise derive a
-    deterministic uuid5(NAMESPACE_DNS, raw). Driver-side scalar — job ids
-    are control-plane values, never data-plane columns."""
-    import uuid
-
-    try:
-        return str(uuid.UUID(raw))
-    except ValueError:
-        return str(uuid.uuid5(uuid.NAMESPACE_DNS, raw))
-
-
-JOB_STATUSES = ["JOB_CREATED", "JOB_RUNNING", "JOB_SUCCESS", "JOB_FAILED"]
-
-
-def job_status_transition(
-    jobs: DataFrame,
-    job_id: str,
-    new_status: str,
-    at,  # Column or literal timestamp — injected for determinism
-    error_message: str | None = None,
-) -> DataFrame:
-    """Status transition with completed_at stamping (RDS/app.py:417-444):
-    completed_at is set only when entering a terminal status."""
-    if new_status not in JOB_STATUSES:
-        raise ValueError(f"unknown status {new_status}")
-    is_target = F.col("job_id") == job_id
-    terminal = new_status in ("JOB_SUCCESS", "JOB_FAILED")
-    out = jobs.withColumn(
-        "status", F.when(is_target, F.lit(new_status)).otherwise(F.col("status"))
-    ).withColumn("updated_at", F.when(is_target, at).otherwise(F.col("updated_at")))
-    if terminal:
-        out = out.withColumn(
-            "completed_at", F.when(is_target, at).otherwise(F.col("completed_at"))
-        )
-    if error_message is not None:
-        out = out.withColumn(
-            "error_message",
-            F.when(is_target, F.lit(error_message)).otherwise(F.col("error_message")),
-        )
-    return out

@@ -103,16 +103,11 @@ from bodhium_webscrapper_spark.plans.bucketed_fetch import (
 from bodhium_webscrapper_spark.plans.checkpoint import CHECKPOINT_FORMAT, SnapshotStore
 from bodhium_webscrapper_spark.plans.metrics import lineage_rows_table, observed
 
-FRONTIER_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.LongType()),
-        T.StructField("canonical_url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("depth", T.IntegerType()),
-        T.StructField("priority", T.DoubleType()),
-        T.StructField("retry_count", T.IntegerType()),
-    ]
-)
+# an outlink's priority is its page's priority times this decay
+PRIORITY_DECAY = 0.5
+# PageRank iterations of each rank_priority_every recompute
+RANK_ITERATIONS = 2
+
 SEEN_SCHEMA = T.StructType(
     [
         T.StructField("url_hash", T.LongType()),
@@ -168,25 +163,24 @@ class CrawlConfig:
     # broadcast; above it, the exact shuffle anti-join on url_hash
     seen_broadcast_threshold: int = 4_000_000
     # build the pending-retry artifact driver-side (pyarrow column reads +
-    # numpy set difference) while the wave's scheduled set fits comfortably
-    # in driver memory; above it, one extra small Spark anti-join job per
-    # MISS-BEARING wave does the same (zero-miss waves never pay either way)
-    pending_driver_threshold: int = 20_000_000
-    # ...and a BYTE gate on the same decision: the driver read pulls string
-    # columns (canonical_url, host), so a row-count gate alone under-counts
-    # wide rows — kilobyte URLs at 20M rows would be tens of GB on a
-    # standard 4-8 GB cluster driver. Gated on the artifact's on-disk
-    # (compressed) footprint; 256 MB compressed ≲ ~1-1.5 GB in memory.
+    # numpy set difference) while the wave's scheduled artifact fits
+    # comfortably in driver memory; above it, one extra small Spark
+    # anti-join job per MISS-BEARING wave does the same (zero-miss waves
+    # never pay either way). Gated on the artifact's on-disk (compressed)
+    # footprint, not its row count: the driver read pulls string columns
+    # (canonical_url, host), which a row count cannot see — kilobyte URLs
+    # at 20M rows would be tens of GB. 256 MB compressed ≲ ~1-1.5 GB in
+    # memory.
     pending_driver_max_bytes: int = 256 * 1024 * 1024
     salt_activation_threshold: int = 2_000_000  # salt only when frontier is huge
-    same_host_only: bool = True  # app.py:497 exclude_external_links
-    # what "same site" means when same_host_only is on (P4):
+    # which outlinks the crawl follows (P4; app.py:497
+    # exclude_external_links):
     #  "host" = exact host equality (default);
     #  "registrable" = eTLD+1 via the embedded public-suffix snapshot
     #    (blog.example.co.uk ↔ example.co.uk);
-    #  "substring" = the reference's quirk (app.py:384-387), fixture mode
+    #  "substring" = the reference's quirk (app.py:384-387), fixture mode;
+    #  "all" = no scope filter (external links kept)
     domain_scope: str = "host"
-    priority_decay: float = 0.5
     verify_extraction: bool = False  # assert byte-identical text vs golden
     # seeds are DECLARED already-canonical (e.g. a full recrawl seeded from
     # this engine's own frontier/seen dump, whose URLs are canonical by
@@ -227,7 +221,6 @@ class CrawlConfig:
     # across N waves. 0 = off (the reference's decay-only ordering).
     rank_priority_every: int = 0
     rank_priority_weight: float = 1.0
-    rank_iterations: int = 2
     # existing bucketed pages layout to re-attach (register_bucketed);
     # default: <checkpoint_dir>/_bucketed_pages, written the first time a
     # wave goes bucketed iff absent — the one-time corpus rewrite
@@ -393,9 +386,7 @@ class CrawlJob:
         self._bucketed = None  # (pages table, wave table): _bucketed_tables()
         # fused extract+canonicalize UDF: one Arrow pass yields text AND the
         # page's canonicalized, scope-filtered outlinks
-        self._extract_udf = make_extract_page_outlinks_udf(
-            config.domain_scope if config.same_host_only else "all"
-        )
+        self._extract_udf = make_extract_page_outlinks_udf(config.domain_scope)
 
     # ---- wave-0 frontier from seeds (reference discovery, app.py:297-396)
     def _seed_frontier(self) -> DataFrame:
@@ -537,18 +528,6 @@ class CrawlJob:
             self._bucketed = (pages_table, f"wave_scheduled_{self.job_id}")
         return self._bucketed
 
-    def _dedup_first_wins(self, frontier: DataFrame) -> DataFrame:
-        return dedup_first_wins_frontier(frontier)
-
-    def _assign_order(self, scheduled: DataFrame, wave: int) -> DataFrame:
-        """Tag the wave id. The wave sequence number is NOT materialized in
-        the hot loop: the order contract is the sort key (priority DESC,
-        url_hash ASC) — a pure function of the data — so seq is computed
-        lazily by ``crawl_order()`` at read/verify time. Removing the global
-        sort + count pass saves one shuffle and two jobs per wave.
-        """
-        return scheduled.withColumn("wave", F.lit(wave))
-
     _PENDING_COLS = ["url_hash", "canonical_url", "host", "depth",
                      "priority", "retry_count"]
 
@@ -558,13 +537,13 @@ class CrawlJob:
         as the ``pending`` artifact; returns its row count.
 
         Zero misses (the common case): an empty table, written driver-side.
-        Small scheduled sets: pyarrow column reads + numpy set difference on
-        the driver — no Spark job. Giant scheduled sets (beyond
-        ``pending_driver_threshold``): one small Spark anti-join job, paid
-        only by miss-bearing giant waves. Either way the artifact is tiny
-        (misses only), so every later consumer — next wave's frontier, the
-        seen-set exclusion — is a cheap read instead of re-deriving the
-        anti-join inside its own plan.
+        Small scheduled artifacts: pyarrow column reads + numpy set
+        difference on the driver — no Spark job. Giant ones (beyond
+        ``pending_driver_max_bytes`` on disk): one small Spark anti-join
+        job, paid only by miss-bearing giant waves. Either way the artifact
+        is tiny (misses only), so every later consumer — next wave's
+        frontier, the seen-set exclusion — is a cheap read instead of
+        re-deriving the anti-join inside its own plan.
         """
         import numpy as np
         import pyarrow as pa
@@ -585,13 +564,9 @@ class CrawlJob:
             return 0
         read_columns = getattr(self.store, "read_columns", None)
         artifact_bytes = getattr(self.store, "artifact_bytes", None)
-        n_scheduled = self.store.row_count(wave, "scheduled")
         driver_ok = (
             read_columns is not None
             and artifact_bytes is not None
-            and n_scheduled <= cfg.pending_driver_threshold
-            # byte gate: on-disk footprint bounds the driver-memory cost of
-            # the string columns a row count cannot see (wide-URL waves)
             and artifact_bytes(wave, "scheduled") <= cfg.pending_driver_max_bytes
         )
         if driver_ok:
@@ -669,7 +644,7 @@ class CrawlJob:
             "canonical_url",
             host_of(F.col("canonical_url")).alias("host"),
             (F.col("parent_depth") + 1).alias("depth"),
-            (F.col("parent_priority") * F.lit(self.config.priority_decay)).alias("priority"),
+            (F.col("parent_priority") * F.lit(PRIORITY_DECAY)).alias("priority"),
             F.lit(0).alias("retry_count"),
         )
         cfg = self.config
@@ -707,7 +682,7 @@ class CrawlJob:
                 self._rank_edges.unpersist()
             self._rank_edges = edges.persist(StorageLevel.MEMORY_AND_DISK)
             ranks = pagerank_fixed_point(
-                self._rank_edges, iterations=cfg.rank_iterations
+                self._rank_edges, iterations=RANK_ITERATIONS
             ).withColumnRenamed("id", "url_hash")
             # blend ONLY the freshly-derived outlinks: pending retries
             # re-enter with the priority they were scheduled at (already
@@ -734,16 +709,16 @@ class CrawlJob:
         wave: int,
         frontier: DataFrame,
         seen: DataFrame,
-        n_candidates: int | None = None,
+        n_candidates: int,
     ) -> WaveStats:
         """Each heavy plan is written straight to the wave snapshot and read
         back — the snapshot IS the cache (one materialization per stage, no
         localCheckpoint double-compute), plans stay O(1), commits idempotent.
 
         Counting discipline: NO .count() actions in the loop. Every count
-        the stats need is either passed in (``n_candidates`` — the previous
-        wave's derived next_candidates) or read driver-side from the parquet
-        footers/columns of an artifact the wave writes anyway
+        the stats need is either passed in (``n_candidates`` — run()'s seeds
+        count, or the previous wave's derived next_candidates) or read
+        driver-side from the parquet footers/columns of an artifact the wave writes anyway
         (``store.row_count`` / ``column_sum`` / ``partition_metrics``). Each
         removed count was a full Spark job of fixed driver latency — the
         dominant per-wave cost at small wave sizes and the reason round-1
@@ -769,14 +744,6 @@ class CrawlJob:
         # scaling pair can be decomposed into per-phase job walls + driver
         # gaps offline — zero-cost observability, no extra actions
         sc = self.spark.sparkContext
-        sc.setJobDescription(f"w{wave}:count_frontier")
-        if n_candidates is None:
-            # seeds wave only (once per run): must count the CANONICALIZED
-            # frontier — with_canonical_url drops null/hostless/non-http
-            # seeds, so a raw seeds.count() would overstate candidates and
-            # could mis-trigger the salting threshold
-            n_candidates = frontier.count()
-        t = mark("count_frontier", t0)
         sc.setJobDescription(f"w{wave}:schedule")
 
         # schedule: dedup -> seen anti-join -> robots -> per-host budget ->
@@ -791,7 +758,7 @@ class CrawlJob:
             # the wave's dominant exchange+sort (see CrawlConfig)
             deduped = frontier
         else:
-            deduped = self._dedup_first_wins(frontier)
+            deduped = dedup_first_wins_frontier(frontier)
         # the real deduplicated count, computed by the scheduled write
         # itself (no extra job): read after the write below
         dedup_obs = Observation()
@@ -846,7 +813,12 @@ class CrawlJob:
             # giant caps: exact threshold-filter form — no single-partition
             # stage (operators/politeness.global_ordered_cap)
             capped = global_ordered_cap(capped, cfg.global_wave_limit)
-        self.store.write(wave, "scheduled", self._assign_order(capped, wave))
+        # tag the wave id only: the wave sequence number is NOT materialized
+        # in the hot loop. The order contract is the sort key (priority DESC,
+        # url_hash ASC), a pure function of the data, so crawl_order()
+        # computes seq lazily at read/verify time; a global sort + count
+        # here would cost one shuffle and two jobs per wave
+        self.store.write(wave, "scheduled", capped.withColumn("wave", F.lit(wave)))
         dedup_metrics = observed(dedup_obs)
         # None: the observed stage was dropped (a wave that schedules
         # nothing), and only such a wave counts its deduped frontier itself
@@ -884,7 +856,7 @@ class CrawlJob:
                 wave_table,
                 cfg.fetch_buckets,
             )
-        t = mark("schedule", t)
+        t = mark("schedule", t0)
         sc.setJobDescription(f"w{wave}:fetch_extract")
 
         # fetch: pages are NEVER shuffled per wave, whatever its size.
@@ -1264,8 +1236,16 @@ class CrawlJob:
     def seen_set(self) -> DataFrame:
         """Distinct permanently-seen URLs. A retried URL appears in several
         waves' scheduled deltas; the anti-join in the hot loop tolerates the
-        duplicates, the reporting contract here does not."""
-        return self._seen_upto(self.store.committed_wave()).dropDuplicates(["url_hash"])
+        duplicates, the reporting contract here does not. A group-by, not
+        ``dropDuplicates(["url_hash"])``: Spark 4.1 cannot plan a subset
+        ``dropDuplicates`` under ``exceptAll`` (INTERNAL_ERROR, attribute
+        not found), and url is a function of url_hash, so min(url) is the
+        one url of each key."""
+        return (
+            self._seen_upto(self.store.committed_wave())
+            .groupBy("url_hash")
+            .agg(F.min("url").alias("url"))
+        )
 
     def extracted(self) -> DataFrame:
         df = self.store.read_deltas(self.spark, "page_results", self.store.committed_wave())

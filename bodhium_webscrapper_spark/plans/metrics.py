@@ -16,11 +16,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-LINEAGE_SCHEMA = (
-    "job_id string, wave int, event_seq long, event string, "
-    "partition_id int, details map<string,string>"
-)
-
 
 def observed(obs: Observation) -> dict | None:
     """The metrics an Observation recorded during its first action, or None
@@ -153,9 +148,10 @@ def _spark_output_counts(spark, path: str, sum_col: str | None) -> dict:
 
 
 def lineage_rows_table(job_id: str, wave: int, events: list[tuple[str, dict]]):
-    """Driver-side pyarrow table of orchestration events for one wave
-    (schema = LINEAGE_SCHEMA). The analogue of the reference's DynamoDB
-    event trail (app.py:817-860, pk=job_id / sk ordering ≙ event_seq) —
+    """Driver-side pyarrow table of orchestration events for one wave:
+    ``(job_id string, wave int, event_seq long, event string, partition_id
+    int, details map<string,string>)``. The analogue of the reference's
+    DynamoDB event trail (app.py:817-860, pk=job_id / sk ordering ≙ event_seq) —
     written with the wave commit, zero Spark jobs. Idempotent under
     re-commit: a crashed wave rewrites its whole lineage artifact, so
     resume replays no duplicate events.
@@ -176,5 +172,3 @@ def lineage_rows_table(job_id: str, wave: int, events: list[tuple[str, dict]]):
             ),
         }
     )
-
-

@@ -287,25 +287,6 @@ def generate_crawl_fixture(
     return paths
 
 
-def pages_between(spark, path: str, start_ts, end_ts, columns: list[str] | None = None):
-    """Event-time pruned scan of the pages table: warc_ts ∈ [start, end).
-
-    On Iceberg with ``days(warc_ts)`` partitioning this is partition
-    pruning; on the parquet shim the pushed-down filter skips row groups
-    via min/max stats. Either way the predicate must reach the scan
-    (asserted in tests/test_explain_plans.py) — a post-scan filter would
-    read all 100 TB to keep a day.
-    """
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(path)
-    if columns:
-        df = df.select(*[c for c in columns if c != "warc_ts"], "warc_ts")
-    return df.filter(
-        (F.col("warc_ts") >= F.lit(start_ts)) & (F.col("warc_ts") < F.lit(end_ts))
-    )
-
-
 def prepare_pages(spark, raw_path: str, out_path: str, n_files: int = 32) -> str:
     """Key the pages table by xxhash64(url) and lay it out sorted by key.
 

@@ -57,10 +57,9 @@ def parse_sitemap(
     ``entry_pos`` is the 0-based position of the entry in its document, so
     downstream first-wins dedup keeps the sitemap author's ordering.
     ``lastmod`` stays a trimmed string (W3C datetime or date); casting is
-    the caller's choice (``pages_between`` event-time pruning casts it).
-    Entries with no ``<loc>`` are dropped. URLs are entity-unescaped but
-    NOT canonicalized — that is the seed pipeline's job, same contract as
-    :func:`..operators.robots.parse_robots_sitemaps`.
+    the caller's choice. Entries with no ``<loc>`` are dropped. URLs are
+    entity-unescaped but NOT canonicalized — that is the seed pipeline's
+    job.
     """
     kind = F.when(
         F.col(xml_col).contains("<sitemapindex"), F.lit("index")

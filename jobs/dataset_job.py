@@ -235,8 +235,7 @@ def main() -> int:
         # lang_pred: the corpus-trained char-bigram familiarity is a
         # doc-keyed join (same lazy class as the Gopher repetition gate),
         # the per-lang ntile a lazy window — both fold into the job's two
-        # actions. At 10^9-docs-per-language scale, swap the window for
-        # quality.ccnet_assign_by_cutoffs with sample-derived cutoffs.
+        # actions.
         fam = char_ngram_familiarity(
             docs.select(args.id_col, args.text_col), args.id_col, args.text_col
         ).select(

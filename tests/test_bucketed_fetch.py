@@ -155,6 +155,9 @@ def test_bucketed_loop_identical_to_broadcast(spark, crawl_fixture, tmp_path):
             assert jk.store.has_artifact(w, "scheduled_bkt"), w
             assert not jb.store.has_artifact(w, "scheduled_bkt"), w
         _assert_same_crawl(spark, jb, jk)
+        # the seen set is a set-algebra operand too: exceptAll both ways
+        xs, ys = jb.seen_set(), jk.seen_set()
+        assert xs.exceptAll(ys).isEmpty() and ys.exceptAll(xs).isEmpty()
     finally:
         _drop_tables(spark, "bk_bkt")
 

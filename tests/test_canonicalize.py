@@ -87,25 +87,6 @@ def test_variant_urls_collide(spark):
     assert canon == {"https://megahost.example/p7"}
 
 
-def test_url_slug(spark):
-    from bodhium_webscrapper_spark.functions.canonicalize import url_slug
-
-    df = spark.createDataFrame(
-        [
-            ("https://h.example/",),
-            ("https://h.example/a/b/c",),
-            ("https://h.example/p?x=1",),
-            ("https://h.example/" + "x" * 200,),
-        ],
-        ["url"],
-    )
-    rows = [r.slug for r in df.select(url_slug(F.col("url")).alias("slug")).collect()]
-    assert rows[0] == "index"
-    assert rows[1] == "a_b_c"
-    assert rows[2].startswith("p_") and len(rows[2]) == 10  # md5[:8] suffix
-    assert len(rows[3]) <= 100
-
-
 def test_strip_tracking_params_hand_cases(spark):
     from bodhium_webscrapper_spark.functions.canonicalize import (
         strip_tracking_params,

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from bodhium_webscrapper_spark.operators.dedup import dedup_clusters
-from bodhium_webscrapper_spark.operators.diff import diff_counts, snapshot_diff
+from bodhium_webscrapper_spark.operators.diff import snapshot_diff
 
 
 def test_snapshot_diff_classifies_all_four_states(spark):
@@ -17,20 +17,6 @@ def test_snapshot_diff_classifies_all_four_states(spark):
     )
     got = {r["url"]: r["status"] for r in snapshot_diff(old, new).collect()}
     assert got == {"a": "removed", "b": "unchanged", "c": "changed", "d": "added"}
-
-
-def test_diff_counts_rollup(spark):
-    old = spark.createDataFrame(
-        [("a", "h1"), ("b", "h2")], "url string, content_hash string"
-    )
-    new = spark.createDataFrame(
-        [("b", "h2"), ("c", "h3")], "url string, content_hash string"
-    )
-    counts = {
-        r["status"]: r["n_urls"]
-        for r in diff_counts(snapshot_diff(old, new)).collect()
-    }
-    assert counts == {"added": 1, "removed": 1, "unchanged": 1}
 
 
 def test_snapshot_diff_output_cardinality_is_key_union(spark):

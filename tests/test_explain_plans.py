@@ -1,6 +1,5 @@
-"""Physical-plan guards, promoted from tests/explain_plans.py into pytest:
-the optimizations the engine's 100 TB story depends on must be visible in
-the plans, not just intended.
+"""Physical-plan guards: the optimizations the engine's 100 TB story
+depends on must be visible in the plans, not just intended.
 
 - parquet scans carry PushedFilters + pruned ReadSchema
 - the fetch join broadcasts the wave and never shuffles pages
@@ -111,17 +110,6 @@ def test_textstats_zero_python(spark):
     assert "EvalPython" not in plan_of(q)
 
 
-def test_minhash_signature_zero_python(spark):
-    from bodhium_webscrapper_spark.operators.dedup import (
-        distinct_shingles_col,
-        minhash_signature,
-    )
-
-    docs = spark.read.parquet(f"{SF}/documents.parquet")
-    q = docs.select(minhash_signature(distinct_shingles_col(F.col("text"), 3), 16))
-    assert "EvalPython" not in plan_of(q)
-
-
 def test_canonicalizer_arrow_batched(spark):
     from bodhium_webscrapper_spark.functions.canonicalize import with_canonical_url
 
@@ -141,27 +129,6 @@ def test_seed_canonicalization_single_python_pass(spark):
     )
     tree = plan_of(with_canonical_url(seeds)).split("\n\n")[0]
     assert tree.count("ArrowEvalPython") == 1
-
-
-def test_event_time_pruning_reaches_scan(spark, crawl_fixture):
-    """Batch event-time handling: the warc_ts range predicate must be
-    pushed into the parquet scan (days(warc_ts) partition-pruning analogue
-    on the parquet shim)."""
-    import datetime
-
-    from bodhium_webscrapper_spark.sources.datagen import pages_between
-
-    df = pages_between(
-        spark,
-        crawl_fixture["pages"],
-        datetime.datetime(2024, 1, 1),
-        datetime.datetime(2024, 1, 2),
-        columns=["url_hash", "url"],
-    )
-    p = plan_of(df)
-    assert "PushedFilters" in p and "warc_ts" in p.split("PushedFilters")[1][:200]
-    read_schema = p.split("ReadSchema: ")[1].splitlines()[0]
-    assert "warc_ts" in read_schema and "html" not in read_schema  # pruned
 
 
 def test_anchor_text_single_scan_single_scalar_join(spark):

@@ -1,7 +1,8 @@
 """Extractor tests: the byte-identical per-row invariant (BASELINE.json).
 
 The pinned extractor defines the golden `text` column of the pages fixture;
-the engine's pandas UDF must reproduce it byte-for-byte for every url.
+the wave loop's fused extract+outlink UDF must reproduce it byte-for-byte
+for every url.
 """
 
 from pyspark.sql import functions as F
@@ -9,7 +10,7 @@ from pyspark.sql import functions as F
 from bodhium_webscrapper_spark.functions.extract import (
     extract_links_py,
     extract_text_py,
-    extract_text_udf,
+    make_extract_page_outlinks_udf,
 )
 
 HTML = (
@@ -49,10 +50,11 @@ def test_extract_links():
 
 
 def test_byte_identical_vs_golden_fixture(spark, crawl_fixture):
-    """Engine UDF output == stored golden text for EVERY page (bytes)."""
+    """The loop's extractor text == stored golden text for EVERY page (bytes)."""
     pages = spark.read.parquet(crawl_fixture["pages"])
+    page_udf = make_extract_page_outlinks_udf("host")
     mismatch = (
-        pages.withColumn("engine_text", extract_text_udf(F.col("html")))
+        pages.withColumn("engine_text", page_udf(F.col("html"), F.col("url")).getField("text"))
         .filter(~F.col("engine_text").eqNullSafe(F.col("text")))
         .count()
     )

@@ -1,10 +1,7 @@
 """Fixed-point integer PageRank (operators/pagerank.py)."""
 from __future__ import annotations
 
-from bodhium_webscrapper_spark.operators.pagerank import (
-    pagerank_fixed_point,
-    priority_from_rank,
-)
+from bodhium_webscrapper_spark.operators.pagerank import pagerank_fixed_point
 
 
 def _edges(spark, pairs):
@@ -34,21 +31,6 @@ def test_pagerank_multigraph_and_determinism(spark):
          pagerank_fixed_point(e.repartition(7, "dst"), iterations=4).collect()}
     assert a == b
     assert a[0] == max(a.values())  # the planted hub dominates
-
-
-def test_priority_from_rank_levels(spark):
-    e = _edges(spark, [(i, 0) for i in range(1, 40)] + [(0, 1), (1, 2)])
-    ranks = pagerank_fixed_point(e, iterations=2)
-    out = {r["id"]: r["priority_level"] for r in
-           priority_from_rank(ranks, n_levels=4).collect()}
-    assert out[0] == 1  # hub gets the top level
-    assert set(out.values()) <= {1, 2, 3, 4}
-    plan = (
-        priority_from_rank(ranks, n_levels=4)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    # the bucketing is threshold-based: no window operator at all
-    assert "Window" not in plan
 
 
 def test_pagerank_checkpoint_every_same_result(spark):

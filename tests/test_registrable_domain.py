@@ -125,7 +125,7 @@ def test_e2e_domain_scopes(spark, tmp_path):
     ) == {"foo.co.uk", "shop.foo.co.uk", "evilfoo.co.uk"}
     # scope off: everything reachable
     assert _crawl_hosts(
-        spark, pages, tmp_path, "all", same_host_only=False
+        spark, pages, tmp_path, "all", domain_scope="all"
     ) == {
         "foo.co.uk", "shop.foo.co.uk", "blog.foo.co.uk",
         "evilfoo.co.uk", "other.example",

@@ -1,4 +1,4 @@
-"""parse_robots_txt / parse_robots_sitemaps / parse_sitemap — raw web
+"""parse_robots_txt / parse_sitemap — raw web
 inputs (robots.txt text, sitemap XML) into the engine's typed tables.
 
 Reference parity note: the reference has neither a robots parser nor a
@@ -16,7 +16,6 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F  # noqa: E402
 
 from bodhium_webscrapper_spark.operators.robots import (  # noqa: E402
-    parse_robots_sitemaps,
     parse_robots_txt,
     robots_gate,
 )
@@ -185,17 +184,6 @@ def test_parse_robots_no_python_in_plan(spark):
         .toString()
     )
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_parse_robots_sitemaps(spark):
-    rows = sorted(
-        (r["host"], r["sitemap_url"])
-        for r in parse_robots_sitemaps(_raw(spark)).collect()
-    )
-    assert rows == [
-        ("h0.example", "https://h0.example/sitemap.xml"),
-        ("h1.example", "https://h1.example/s.xml"),
-    ]
 
 
 URLSET = """<?xml version="1.0" encoding="UTF-8"?>

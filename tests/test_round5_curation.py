@@ -19,7 +19,6 @@ from bodhium_webscrapper_spark.operators.mixing import (
     dsir_select,
 )
 from bodhium_webscrapper_spark.operators.quality import (
-    ccnet_assign_by_cutoffs,
     ccnet_buckets,
     char_ngram_familiarity,
     gopher_quality_signals,
@@ -154,31 +153,6 @@ def test_ccnet_gibberish_lands_in_tail(spark):
     got = {r["doc_id"]: r["bucket"] for r in out.collect()}
     assert all(got[100 + i] == "tail" for i in range(3))
     assert sorted(got.values()).count("head") == 5  # 15 docs -> 5/5/5
-
-
-def test_ccnet_cutoff_path_matches_exact_ntile(spark):
-    """The 100 TB assignment path (broadcast cutoffs, zero window) agrees
-    with the exact per-lang ntile when cutoffs are derived from it and no
-    score ties straddle a boundary (tie-free scores here, so: everywhere)."""
-    rows = [
-        (i, ["en", "de", "fr"][i % 3], (i * 37) % 1000)
-        for i in range(30)
-    ]
-    scored = spark.createDataFrame(
-        rows, "doc_id long, lang string, rare_ppm long"
-    )
-    exact = ccnet_buckets(scored, "doc_id", "lang", "rare_ppm")
-    cutoffs = exact.groupBy("lang").agg(
-        F.max(F.when(F.col("bucket") == "head", F.col("rare_ppm"))).alias("head_max"),
-        F.max(F.when(F.col("bucket") == "middle", F.col("rare_ppm"))).alias("middle_max"),
-    )
-    by_cut = ccnet_assign_by_cutoffs(scored, "doc_id", "lang", "rare_ppm", cutoffs)
-    e = {r["doc_id"]: r["bucket"] for r in exact.collect()}
-    c = {r["doc_id"]: r["bucket"] for r in by_cut.collect()}
-    assert e == c
-    # 10 docs per lang -> ntile(3) = 4/3/3 (head takes the remainder)
-    assert sorted(e.values()).count("head") == 12
-    assert sorted(e.values()).count("tail") == 9
 
 
 def test_dataset_job_gopher_quality_gate(spark, tmp_path, monkeypatch):

@@ -1,15 +1,12 @@
 """Similarity search + text-analysis + multimodal plumbing tests."""
 
 import numpy as np
-import pytest
 from pyspark.sql import functions as F
 
 from bodhium_webscrapper_spark.functions.multimodal import (
     deterministic_media_fixture,
     extract_features,
-    fake_decode,
     frame_sample_plan,
-    real_decode_stub,
 )
 from bodhium_webscrapper_spark.functions.textstats import (
     lang_id,
@@ -125,13 +122,6 @@ def test_media_features_shapes(spark):
     assert {r.media_id for r in feats} == {1, 2}
     assert all(r.feat_dim == 32 for r in feats)
     assert all(abs(sum(r.feature) - 1.0) < 1e-5 for r in feats)
-
-
-def test_real_decode_is_stubbed():
-    with pytest.raises(NotImplementedError):
-        real_decode_stub(b"\x89PNG....")
-    v = fake_decode(b"abc")
-    assert v.shape == (32,) and abs(v.sum() - 1.0) < 1e-6
 
 
 def test_frame_sample_plan_deterministic(spark):

@@ -1,17 +1,10 @@
-"""Upsert/job-registry operators + report sinks (SURVEY S7/S8/S10/S11, J3, A7)."""
-
-import json
-import os
-
-from pyspark.sql import functions as F
+"""Upsert operators (SURVEY S10, J2, J3, A7)."""
 
 from bodhium_webscrapper_spark.operators.upsert import (
-    job_status_transition,
     link_table,
     upsert_by_key,
     with_product_hash,
 )
-from bodhium_webscrapper_spark.sources.sinks import crawl_report, csv_sink
 
 
 def _products(spark, rows):
@@ -50,110 +43,3 @@ def test_link_table_dup_safe(spark):
     )
     out = link_table(pairs, "job_id", "product_id")
     assert out.count() == 3
-
-
-def test_job_status_transition(spark):
-    jobs = spark.createDataFrame(
-        [("j1", "JOB_RUNNING", None, None, None), ("j2", "JOB_RUNNING", None, None, None)],
-        "job_id string, status string, updated_at timestamp, completed_at timestamp, "
-        "error_message string",
-    )
-    at = F.lit("2025-06-01 00:00:00").cast("timestamp")
-    done = job_status_transition(jobs, "j1", "JOB_SUCCESS", at)
-    rows = {r.job_id: r for r in done.collect()}
-    assert rows["j1"].status == "JOB_SUCCESS" and rows["j1"].completed_at is not None
-    assert rows["j2"].status == "JOB_RUNNING" and rows["j2"].completed_at is None
-    failed = job_status_transition(done, "j2", "JOB_FAILED", at, error_message="boom")
-    rows = {r.job_id: r for r in failed.collect()}
-    assert rows["j2"].status == "JOB_FAILED" and rows["j2"].error_message == "boom"
-    assert rows["j1"].error_message is None
-
-
-def test_csv_sink_and_report(spark, tmp_path):
-    order = spark.createDataFrame(
-        [(0, 1, "https://a/1"), (0, 2, "https://a/2"), (1, 1, "https://a/3")],
-        ["wave", "seq", "canonical_url"],
-    )
-    extracted = spark.createDataFrame(
-        [(1, "https://a/1", 0, "hello world")],
-        ["url_hash", "canonical_url", "wave", "text"],
-    )
-    metrics = spark.createDataFrame(
-        [(0, "fetched", 0, 1, 11), (0, "scheduled", 0, 2, 0)],
-        ["wave", "stage", "partition_id", "rows", "bytes"],
-    )
-    rep = crawl_report(order, extracted, metrics, "job-x").first()
-    doc = json.loads(rep.report)
-    assert doc["total_scheduled"] == 3 and doc["pages_extracted"] == 1
-    assert doc["bytes_extracted"] == 11
-    assert doc["waves"] == [{"wave": 0, "n_urls": 2}, {"wave": 1, "n_urls": 1}]
-
-    p = os.path.join(str(tmp_path), "csv_out")
-    csv_sink(order, p, single_file=True)
-    back = spark.read.option("header", True).csv(p)
-    assert back.count() == 3
-
-
-def test_deterministic_job_id():
-    from bodhium_webscrapper_spark.operators.upsert import deterministic_job_id
-
-    u = "123e4567-e89b-12d3-a456-426614174000"
-    assert deterministic_job_id(u) == u
-    a = deterministic_job_id("my-job")
-    assert a == deterministic_job_id("my-job") and a != deterministic_job_id("other")
-    import uuid
-    uuid.UUID(a)  # valid uuid
-
-
-def test_report_roundtrip_and_corrupt_row(spark):
-    """U3: from_json edge — a stored report parses back to typed columns;
-    a malformed report row degrades to nulls (report_ok=False), never an
-    error."""
-    from bodhium_webscrapper_spark.sources.sinks import parse_report
-
-    order = spark.createDataFrame(
-        [(0, 1, "https://a.example/"), (0, 2, "https://b.example/")],
-        "wave int, seq int, canonical_url string",
-    )
-    extracted = spark.createDataFrame(
-        [(1, "https://a.example/", 0, "hello world")],
-        "url_hash long, canonical_url string, wave int, text string",
-    )
-    metrics = spark.createDataFrame(
-        [(0, "fetched", 0, 1, 11)],
-        "wave int, stage string, partition_id int, rows long, bytes long",
-    )
-    rep = crawl_report(order, extracted, metrics, "job-rt")
-    good = parse_report(rep).first()
-    assert good["report_ok"] and good["job_id"] == "job-rt"
-    assert good["total_scheduled"] == 2 and good["pages_extracted"] == 1
-    assert [(w["wave"], w["n_urls"]) for w in good["waves"]] == [(0, 2)]
-
-    corrupt = spark.createDataFrame([("{not json",), (None,)], "report string")
-    rows = parse_report(corrupt).collect()
-    assert all(not r["report_ok"] for r in rows)
-    assert all(r["job_id"] is None for r in rows)
-
-
-def test_valid_products_filter(spark):
-    """P8: rows with blank/missing name or source_url are dropped."""
-    from bodhium_webscrapper_spark.operators.upsert import valid_products
-
-    df = spark.createDataFrame(
-        [("A", "https://a"), ("", "https://b"), ("  ", "https://c"),
-         (None, "https://d"), ("E", None), ("F", " "), ("G", "https://g")],
-        "productname string, source_url string",
-    )
-    kept = [r.productname for r in valid_products(df).collect()]
-    assert sorted(kept) == ["A", "G"]
-
-
-def test_truncate_content(spark):
-    """P9: content capped at max_chars, short rows untouched."""
-    from pyspark.sql import functions as F
-
-    from bodhium_webscrapper_spark.operators.upsert import truncate_content
-
-    df = spark.createDataFrame([("x" * 100,), ("short",)], "text string")
-    out = df.select(F.length(truncate_content(F.col("text"), 10)).alias("n")).collect()
-    assert sorted(r.n for r in out) == [5, 10]
