@@ -255,28 +255,14 @@ _Q_BLOCKLIST_SQL = """
 
 
 def q_seen_antijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J2/A1: URL-seen anti-join with bloom pre-pass (bloom-on == bloom-off).
-
-    The bloom is the executor-side DistributedBloom blob table (cogrouped
-    probe) — blob bytes never transit the driver. The wave loop does not
-    use it: its seen anti-join is exact with no pre-filter (broadcast, or
-    shuffled above seen_broadcast_threshold)."""
-    from bodhium_webscrapper_spark.operators.seen import (
-        DistributedBloom, seen_anti_join,
-    )
-
+    """J2/A1: the exact URL-seen anti-join on url_hash, the wave loop's
+    seen step. Registered as ``seen_antijoin_bloom``, a pinned key the
+    driver gate verifies; there is no bloom pre-pass any more."""
     docs = _t(spark, sf_dir, "documents")
-    frontier = docs.select(
-        F.xxhash64(F.concat(F.lit("u"), F.col("doc_id").cast("string"))).alias("url_hash"),
-        F.col("doc_id"),
-    )
-    seen = docs.filter(F.col("doc_id") % 2 == 0).select(
-        F.xxhash64(F.concat(F.lit("u"), F.col("doc_id").cast("string"))).alias("url_hash"),
-        F.lit("x").alias("url"),
-    )
-    bloom = DistributedBloom(spark, n_buckets=8, capacity=100_000)
-    bloom.add_delta(seen)
-    return seen_anti_join(frontier, seen, bloom=bloom.state()).select("doc_id").orderBy("doc_id")
+    key = F.xxhash64(F.concat(F.lit("u"), F.col("doc_id").cast("string"))).alias("url_hash")
+    frontier = docs.select(key, F.col("doc_id"))
+    seen = docs.filter(F.col("doc_id") % 2 == 0).select(key)
+    return frontier.join(seen, "url_hash", "left_anti").select("doc_id").orderBy("doc_id")
 
 
 _Q_SEEN_ANTIJOIN_SQL = "SELECT doc_id FROM documents WHERE doc_id % 2 = 1 ORDER BY doc_id"

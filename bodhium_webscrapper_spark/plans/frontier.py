@@ -15,9 +15,10 @@ parquet footers and the next frontier is DERIVED, not materialized:
   frontier_t = explode(page_results_{t-1}.outlinks) ∪ pending misses
                (lazy plan over committed artifacts; wave 0: seeds)
   candidates = dedup(frontier_t)   first-wins per url_hash         [A1]
-  new        = candidates ANTI-JOIN seen (broadcast, or exact shuffle
-               above seen_broadcast_threshold; wave 0: an empty
-               relation the optimizer folds away)                  [J2]
+  new        = candidates ANTI-JOIN seen ON url_hash AND
+               retry_count = 0 (pending retries pass; broadcast, or
+               exact shuffle above seen_broadcast_threshold; wave 0:
+               an empty relation the optimizer folds away)         [J2]
   gated      = new ⋈ policy ON host, filter robots verdict,        [U5/W3]
                budget = coalesce(crawl-delay budget, default)
                (policy: the per-host politeness table, built once
@@ -39,15 +40,14 @@ parquet footers and the next frontier is DERIVED, not materialized:
 
 Under AQE every exchange and broadcast of an action is a Spark job of its
 own. ``perfbench/run.py --workload crawl_wide --trace 1`` (robots with
-crawl delays, default config, 3 waves) measured 8 jobs per wave:
+crawl delays, default config, 3 waves) measured these jobs, 16 schedule
+jobs in all:
 
   schedule (6)  wave 0:  crawl-delay aggregation and policy-table exchange
                          (both once per run), dedup exchange, policy-table
                          broadcast, politeness exchange, scheduled write
-                wave ≥1: pending-retry keys broadcast (the seen set's
-                         exclusion), policy-table broadcast, dedup
-                         exchange, seen broadcast, politeness exchange,
-                         scheduled write
+  schedule (5)  wave ≥1: policy-table broadcast, dedup exchange, seen
+                         broadcast, politeness exchange, scheduled write
   fetch (2)     scheduled-wave broadcast, page_results write
 
 before which run() counts the canonicalized seeds (3 jobs, once). A
@@ -271,7 +271,9 @@ def dedup_first_wins_frontier(frontier: DataFrame) -> DataFrame:
     fresh outlink (retry_count=0) must not have its retry budget reset —
     otherwise a permanently-missing URL that is re-linked every wave is
     rescheduled until max_waves instead of being dropped after
-    1+max_retries attempts.
+    1+max_retries attempts. The seen anti-join relies on the same max: it
+    lets a row through by retry_count > 0, so a pending retry must not be
+    demoted to a fresh (and already seen) outlink.
 
     ``host`` is DROPPED before the exchange and re-derived after the
     filter: every frontier source computes host as exactly
@@ -541,9 +543,10 @@ class CrawlJob:
         difference on the driver — no Spark job. Giant ones (beyond
         ``pending_driver_max_bytes`` on disk): one small Spark anti-join
         job, paid only by miss-bearing giant waves. Either way the artifact
-        is tiny (misses only), so every later consumer — next wave's
-        frontier, the seen-set exclusion — is a cheap read instead of
-        re-deriving the anti-join inside its own plan.
+        is tiny (misses only), so its consumers — the next wave's
+        frontier, and the seen-set exclusion of readers outside the loop
+        — are cheap reads instead of re-deriving the anti-join inside
+        their own plans.
         """
         import numpy as np
         import pyarrow as pa
@@ -599,15 +602,10 @@ class CrawlJob:
         self.store.write(wave, "pending", plan)
         return self.store.row_count(wave, "pending")
 
-    def _pending_misses(self, wave: int, incremented: bool) -> DataFrame:
-        """Read the wave's pending-retry artifact. ``incremented=True``
-        returns full frontier rows (retry_count already +1 as stored — the
-        retry term of the wave equation); ``incremented=False`` returns bare
-        keys (the seen-set exclusion)."""
-        pending = self.store.read(self.spark, wave, "pending")
-        if not incremented:
-            return pending.select("url_hash")
-        return pending.select(*self._PENDING_COLS)
+    def _pending_misses(self, wave: int) -> DataFrame:
+        """The wave's pending-retry artifact: frontier rows with
+        retry_count already +1 as stored."""
+        return self.store.read(self.spark, wave, "pending")
 
     def _frontier_after(self, wave: int) -> DataFrame:
         """frontier_{wave+1}, DERIVED lazily from committed artifacts:
@@ -701,7 +699,7 @@ class CrawlJob:
                 )
                 .drop("rank")
             )
-        return outl.unionByName(self._pending_misses(wave, incremented=True))
+        return outl.unionByName(self._pending_misses(wave))
 
     # ---- one wave = one pure dataflow, materialized once into the snapshot
     def _run_wave(
@@ -727,9 +725,9 @@ class CrawlJob:
         above ``broadcast_wave_threshold``, one narrow third: the
         numeric-only (32 B/row) bucketed wave-table write, read back from
         the scheduled artifact's footers rather than recomputed. AQE runs
-        each exchange and broadcast of an action as a job of its own: 6
-        schedule + 2 fetch jobs per wave as measured (the list is in the
-        module docstring).
+        each exchange and broadcast of an action as a job of its own: 5
+        schedule jobs per wave ≥1 (6 on wave 0) + 2 fetch jobs as measured
+        (the list is in the module docstring).
         """
         cfg = self.config
         t0 = time.time()
@@ -766,7 +764,14 @@ class CrawlJob:
         seen_keys = seen.select("url_hash")
         if self._total_seen <= cfg.seen_broadcast_threshold:
             seen_keys = F.broadcast(seen_keys)
-        new = counted.join(seen_keys, "url_hash", "left_anti")
+        # only the previous wave's pending retries carry retry_count > 0
+        # (seeds and outlinks enter with 0, and the dedup keeps each key's
+        # max), so they pass a seen set that still holds their keys
+        new = counted.join(
+            seen_keys,
+            (counted["url_hash"] == seen_keys["url_hash"]) & (counted["retry_count"] == 0),
+            "left_anti",
+        )
         # robots verdict + crawl-delay budget: one join on host against the
         # per-run policy table (see _host_policy)
         gated, budget_col = new, None
@@ -956,9 +961,9 @@ class CrawlJob:
         # frontier-row form (retry_count already incremented). Keeping this
         # as a stored artifact instead of a lazy anti-join plan removes a
         # whole broadcast-build sub-job from every subsequent schedule stage
-        # (the next wave's frontier and seen-exclusion just READ it) — that
-        # sub-job was ~half the schedule stage's parallelism-independent
-        # cost. The zero-miss wave (the common case) costs nothing at all.
+        # (the next wave's frontier just READS it) — that sub-job was ~half
+        # the schedule stage's parallelism-independent cost. The zero-miss
+        # wave (the common case) costs nothing at all.
         sc.setJobDescription(f"w{wave}:count_next")
         n_misses = n_scheduled - n_fetched
         # the two driver-side reads are independent (pending reads the
@@ -1115,7 +1120,7 @@ class CrawlJob:
             n_frontier = self.store.manifest()["waves"][str(committed)].get(
                 "next_candidates"
             )
-            seen = self._seen_upto(committed)
+            seen = self._scheduled_upto(committed)
             seed_cache = None
         else:
             start = 0
@@ -1182,7 +1187,7 @@ class CrawlJob:
                 self.store.compact_deltas(self.spark, "scheduled", wave)
             frontier = self._frontier_after(wave)
             n_frontier = stats.next_candidates
-            seen = self._seen_upto(wave)
+            seen = self._scheduled_upto(wave)
 
         if seed_cache is not None:  # empty-seeds break before wave 0 ran
             seed_cache.unpersist()
@@ -1196,7 +1201,7 @@ class CrawlJob:
             "committed_wave": self.store.committed_wave(),
             "total_scheduled": total_scheduled,
             "total_candidates": total_candidates,
-            # driver-side time between waves (read-backs, seen rebuild,
+            # driver-side time between waves (read-backs, seen projection,
             # manifest) — the loop's fixed-cost observability
             "loop_overhead": loop_overhead,
         }
@@ -1215,21 +1220,26 @@ class CrawlJob:
             .orderBy("wave", "seq")
         )
 
+    def _scheduled_upto(self, wave: int) -> DataFrame:
+        """Everything scheduled up to ``wave``, duplicates and all: the seen
+        side of the wave loop's anti-join. The wave's pending retries are
+        in it too; the anti-join lets them through by their retry_count."""
+        df = self.store.read_deltas(self.spark, "scheduled", wave)
+        return df.select("url_hash", F.col("canonical_url").alias("url"))
+
     def _seen_upto(self, wave: int) -> DataFrame:
         """Seen = everything scheduled so far MINUS pending retries.
 
-        A fetch-miss re-enters frontier_{wave+1} with retry_count+1; since
-        it was scheduled, a plain projection of the scheduled table would
-        anti-join it away next wave and the retry would be dead code.
-        Pending retries can only originate from the LATEST committed wave
-        (an older miss either got rescheduled later, or exhausted
-        max_retries and stays seen → permanently dropped), so one small
-        anti-join against that wave's retryable misses restores the wave
-        equation frontier_{t+1} = outlinks ∪ fetch-misses."""
-        df = self.store.read_deltas(self.spark, "scheduled", wave)
-        seen = df.select("url_hash", F.col("canonical_url").alias("url"))
+        A fetch-miss re-enters frontier_{wave+1} with retry_count+1, so it
+        is not seen yet. Pending retries can only originate from the LATEST
+        committed wave (an older miss either got rescheduled later, or
+        exhausted max_retries and stays seen → permanently dropped), so one
+        small anti-join against that wave's retryable misses gives the
+        permanently-seen set. Readers outside the loop use it; the loop
+        itself anti-joins ``_scheduled_upto`` by retry_count instead."""
+        seen = self._scheduled_upto(wave)
         if self.store.has_artifact(wave, "pending"):
-            pending = self._pending_misses(wave, incremented=False)
+            pending = self._pending_misses(wave).select("url_hash")
             seen = seen.join(F.broadcast(pending), "url_hash", "left_anti")
         return seen
 

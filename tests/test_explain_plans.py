@@ -3,6 +3,7 @@ depends on must be visible in the plans, not just intended.
 
 - parquet scans carry PushedFilters + pruned ReadSchema
 - the fetch join broadcasts the wave and never shuffles pages
+- the crawl's seen side is a projection of the scheduled deltas, no join
 - aggregations are partial+final with whole-stage codegen
 - no row-at-a-time Python in the data plane (ArrowEvalPython only)
 """
@@ -84,6 +85,35 @@ def test_fused_fetch_join_single_join_no_exchange(spark, crawl_fixture):
     tree = p.split("\n\n")[0]  # the plan tree, before the per-node detail
     assert tree.count("Join") == 1  # ONE join total: no post-UDF attrs join
     assert "ArrowEvalPython" in p and "BatchEvalPython" not in p
+
+
+def test_seen_side_is_a_projection_of_scheduled(spark, crawl_fixture, tmp_path, monkeypatch):
+    """The seen side a wave after a miss-bearing wave anti-joins is the
+    scheduled deltas and nothing else: no join carves the pending retries
+    out (the anti-join lets them through by retry_count), and the pending
+    artifact is not read."""
+    from bodhium_webscrapper_spark.plans.frontier import CrawlConfig, CrawlJob
+
+    seen_of = {}
+    run_wave = CrawlJob._run_wave
+
+    def spy(self, wave, frontier, seen, n_candidates):
+        seen_of[wave] = seen
+        return run_wave(self, wave, frontier, seen, n_candidates)
+
+    monkeypatch.setattr(CrawlJob, "_run_wave", spy)
+    job = CrawlJob(
+        spark, crawl_fixture["pages"], spark.read.parquet(crawl_fixture["seeds"]),
+        spark.read.parquet(crawl_fixture["robots"]),
+        CrawlConfig(max_urls_per_host_per_wave=5, max_waves=4, global_wave_limit=500),
+        str(tmp_path / "seen_plan"),
+    )
+    job.run()
+    wave = job.store.committed_wave()
+    assert wave >= 2 and job.store.row_count(wave - 1, "pending") > 0
+    seen = seen_of[wave]
+    assert "Join" not in seen._jdf.queryExecution().optimizedPlan().toString()
+    assert not [f for f in seen.inputFiles() if "/pending/" in f]
 
 
 def test_partial_final_aggregation_and_codegen(spark):

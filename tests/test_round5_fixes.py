@@ -378,7 +378,7 @@ def test_rank_bonus_not_accumulated_on_retries(spark, crawl_fixture, tmp_path):
     )
     last = job.store.committed_wave()
     misses_exist = any(w["misses"] > 0 for w in summary["waves"])
-    pending = job._pending_misses(last, incremented=True)
+    pending = job._pending_misses(last)
     if misses_exist and pending.count() > 0:
         sched = job.store.read_deltas(spark, "scheduled", last).select(
             "url_hash", F.col("priority").alias("_sched_p")
